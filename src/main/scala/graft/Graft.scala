@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{FactDb, Schema}
+import graft.core.FactDb
 import graft.datalog.{Compiler, Pull, Query}
 import graft.transact.Transactor
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,8 +27,10 @@ final class Graft private (val session: Transactor.Session,
 
   /** Current database value (immutable snapshot semantics: queries on a
     * Graft handle see facts as of its tx bound, like the reference's
-    * db-as-value). Cardinality honors schema facts. */
-  def db: FactDb = Schema.applySchema(session.db, asOfTx)
+    * db-as-value). Cardinality honors the schema facts visible at that
+    * bound, resolved from the session's commit-time schema record: no
+    * Spark job. */
+  def db: FactDb = session.dbAsOf(asOfTx)
 
   def transact(tx: Seq[Transactor.TxStmt]): Transactor.TxReport = session.transact(tx)
 
@@ -84,7 +86,7 @@ object Graft {
 
   /** Over an existing fact db (e.g. bulk-melted tables or
     * sources.FactLogIO.read). `firstTx`/`firstEntityId` must be above
-    * anything in the log. */
+    * anything in the log. The log's schema facts are read once, here. */
   def over(spark: SparkSession, db: FactDb, firstTx: Long,
            firstEntityId: Long): Graft =
     new Graft(Transactor.session(spark, db, firstTx, firstEntityId))

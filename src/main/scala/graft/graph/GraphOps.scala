@@ -499,7 +499,12 @@ object GraphOps {
         // the assigned-frame checkpoint were two more jobs per peel
         val (trivial, tn) = Bridge.localCheckpointCount(
           nodes.join(nontrivial, Seq("node"), "left_anti"))
-        if (tn == 0) { trimming = false; Bridge.freeCheckpoint(nontrivial) }
+        if (tn == 0) {
+          // nothing peeled: both fresh checkpoints are superseded (the
+          // empty `trivial` is not assigned anywhere)
+          trimming = false
+          Bridge.freeCheckpoint(nontrivial); Bridge.freeCheckpoint(trivial)
+        }
         else {
           assigned += trivial.select(col("node"), col("node").as("scc"))
           val (pn, pe) = (nodes, edges)
@@ -551,9 +556,12 @@ object GraphOps {
               .localCheckpoint(true)
             Bridge.freeCheckpoint(prev) // superseded color map
           }
+          // superseded frontier (round 1's is the initial color map)
+          if (it > 1) Bridge.freeCheckpoint(frontier)
           frontier = improved
         }
         require(it < maxIter, s"scc coloring did not converge in $maxIter rounds")
+        Bridge.freeCheckpoint(frontier) // the last, empty improvement set
         // 3. collect: backward BFS from the color roots inside each color
         // class; the reached set IS the root's SCC
         val cEdges = edges
@@ -573,6 +581,8 @@ object GraphOps {
             .select(cEdges("src").as("node"), bfsFrontier("color").as("color")).distinct()
           val (bf, bfc) = Bridge.localCheckpointCount(
             pred.join(reach, Seq("node"), "left_anti"))
+          // superseded frontier (round 1's is the root set, `reach`)
+          if (it > 1) Bridge.freeCheckpoint(bfsFrontier)
           bfsFrontier = bf
           bn = bfc
           if (bn > 0) {
@@ -582,7 +592,8 @@ object GraphOps {
           }
         }
         require(it < maxIter, s"scc collection did not converge in $maxIter hops")
-        Bridge.freeCheckpoint(cEdges) // collect BFS done with it
+        // collect BFS done with its edges and its last, empty frontier
+        Bridge.freeCheckpoint(cEdges); Bridge.freeCheckpoint(bfsFrontier)
         assigned += reach.select(col("node"), col("color").as("scc"))
         val (pn, pe) = (nodes, edges)
         nodes = nodes.join(reach, Seq("node"), "left_anti").localCheckpoint(true)
@@ -595,8 +606,11 @@ object GraphOps {
       }
     }
     require(remaining == 0, s"scc did not converge in $maxOuter outer rounds")
+    // the result holds only the assigned frames (or, when nothing was
+    // assigned, the empty node set): the working graph is released
+    Bridge.freeCheckpoint(edges)
     if (assigned.isEmpty) nodes.select(col("node"), col("node").as("scc"))
-    else assigned.reduce(_ unionAll _)
+    else { Bridge.freeCheckpoint(nodes); assigned.reduce(_ unionAll _) }
   }
 
   /** Iterative (explicit-stack) Tarjan over a driver-local edge list —

@@ -1,8 +1,9 @@
 package graft.transact
 
-import graft.core.{FactDb, FactStore}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import graft.core.{FactDb, FactStore, Schema}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.Bridge
 
 /** Transaction processing — the Spark-native re-expression of
   * /root/reference/src/unifydb/transact.clj.
@@ -18,12 +19,25 @@ import org.apache.spark.sql.types._
   *    (`make-new-tx-facts`, transact.clj:17-21) and returns a report
   *    with the resolved tempids + tx facts.
   *
-  * Differences (deliberate, Spark-first): tx ids are monotone longs
-  * handed out by the single transactor (the reference serializes
-  * through one queue consumer — same guarantee); fact batches append
-  * to the DataFrame log (at scale: appended parquet files in a
-  * tx-ordered directory layout, compacted periodically). Bulk ingest
-  * bypasses this path via FactStore.melt.
+  * Differences (deliberate, Spark-first):
+  *  - tx ids are monotone longs minted by the session under one commit
+  *    lock (the reference serializes through one queue consumer — same
+  *    guarantee): validation, id minting, the append and publishing
+  *    the new database value happen together, and a rejected
+  *    transaction consumes no id.
+  *  - a commit costs O(transaction) and runs no Spark job. Facts are
+  *    converted once to catalyst rows and appended to ONE driver-side
+  *    delta buffer; the session's log is its base log unioned with a
+  *    single leaf over that buffer — a local relation up to `FoldRows`
+  *    rows, past it one parallelized RDD of at most
+  *    `defaultParallelism` partitions — so log partitions and plan
+  *    leaves stay constant however many transactions ran.
+  *  - each `unifydb/schema` / `unifydb/cardinality` op is recorded with
+  *    its tx at commit, so the cardinality-many set as of any tx
+  *    resolves in memory (`Session.dbAsOf`); a session over an existing
+  *    log reads that log's schema ops once, at open.
+  *
+  * Bulk ingest bypasses this path via FactStore.melt.
   */
 object Transactor {
   sealed trait TxStmt
@@ -91,11 +105,55 @@ object Transactor {
       }
   }
 
-  final class Session(val spark: SparkSession, var db: FactDb,
-                      private var nextTx: Long, private var nextId: Long,
+  /** Delta rows a session's log reads through a local relation; past
+    * this the delta is folded into one parallelized RDD (a local
+    * relation's rows are copied, hashed and constant-folded by Catalyst
+    * on the driver each time a plan over it is built). Measured on a
+    * 4-vCPU VM at `local[4]`, median of 8 warm reads over a delta of n
+    * 10-attribute facts, local relation vs folded RDD: a one-pattern
+    * read and a two-pattern join are level up to n = 16384 (within
+    * ±25 % run to run), then the local relation falls behind: 289 vs
+    * 190 ms and 481 vs 315 ms at n = 65536, 761 vs 328 ms and 1623 vs
+    * 521 ms at n = 262144. Folding at 4096 costs nothing measurable
+    * and keeps a long session off that curve. */
+  private[graft] val FoldRows = 4096
+
+  /** What a session has committed, published whole at each commit.
+    * `delta` holds every transacted fact as a converted catalyst row
+    * (structurally shared between successive values) and `schema`
+    * every schema op with its tx. */
+  private final case class Committed(db: FactDb, delta: Vector[InternalRow],
+                                     schema: Schema.History)
+
+  /** One connection's transactor. `transact` commits atomically: under
+    * one lock it validates the statements, mints the tx id and entity
+    * ids, appends the facts and publishes the new database value, so
+    * concurrent callers get distinct consecutive tx ids and a rejected
+    * transaction consumes no id. Reads (`db`, `dbAsOf`) take no lock. */
+  final class Session(val spark: SparkSession, base: FactDb,
+                      firstTx: Long, firstEntityId: Long,
                       clock: () => Long = () => System.currentTimeMillis(),
                       transforms: Seq[Transform] = Seq(newUserTransform()),
-                      reportFilters: Seq[ReportFilter] = Seq(redactSensitive)) {
+                      reportFilters: Seq[ReportFilter] = Seq(redactSensitive),
+                      baseSchema: Schema.History = Schema.History.empty) {
+
+    private var nextTx = firstTx
+    private var nextId = firstEntityId
+    @volatile private var committed = Committed(base, Vector.empty, baseSchema)
+    private val toRow = Bridge.rowConverter(FactStore.factSchema)
+
+    /** The committed database: the base log unioned with one leaf over
+      * every transacted fact. */
+    def db: FactDb = committed.db
+
+    /** The committed database for reads as of `asOfTx`, its
+      * cardinality-many set extended by the schema facts visible then —
+      * resolved in memory from the ops recorded at commit, no Spark job
+      * (what `Schema.applySchema(db, asOfTx)` derives from the log). */
+    def dbAsOf(asOfTx: Long): FactDb = {
+      val c = committed
+      c.db.copy(cardMany = c.db.cardMany ++ c.schema.cardMany(asOfTx, c.db.cardMany, c.db.versioned))
+    }
 
     private var tempCounter = 0L
     private def freshTemp(): String = { tempCounter += 1; s"graft.temp-$tempCounter" }
@@ -127,9 +185,22 @@ object Transactor {
     /** Marker for a reference-to-entity value (temp id or resolved). */
     case class EntityRef(id: Any)
 
+    /** The value slot a transacted value lands in. */
+    private def slotOf(v: Any): String = v match {
+      case EntityRef(_) => "vref"
+      case _: String => "vstr"
+      case _: Long | _: Int | _: Boolean => "vlong"
+      case _: Double => "vdbl"
+      case _: java.sql.Timestamp => "vts"
+      case other => throw new IllegalArgumentException(s"unsupported value $other")
+    }
+
     def transact(txData: Seq[TxStmt]): TxReport = {
-      val txId = nextTx
-      nextTx += 1
+      val report = synchronized(commit(txData))
+      reportFilters.foldLeft(report)((r, f) => f(r))
+    }
+
+    private def commit(txData: Seq[TxStmt]): TxReport = {
       // every tx writes a tx entity carrying its wall-clock instant
       // (reference make-new-tx-facts, transact.clj:17-21)
       val transformed = transforms.foldLeft(txData.flatMap(expand))((d, t) => t(d))
@@ -139,10 +210,15 @@ object Transactor {
         // "unifydb.tx") — keep the reference's name so verbatim users
         // find it
         Add("unifydb.tx", "unifydb/txInstant", clock())
-      // temp-id resolution
+      val prior = committed
+      val types = checkSlots(expanded, prior.db.attrTypes)
+      // ids are minted into locals and published only with the commit:
+      // a transaction that fails from here on consumes none
+      val txId = nextTx
+      var id = nextId
       val temps = scala.collection.mutable.LinkedHashMap.empty[String, Long]
       def resolveE(e: Any): Long = e match {
-        case s: String => temps.getOrElseUpdate(s, { val id = nextId; nextId += 1; id })
+        case s: String => temps.getOrElseUpdate(s, { id += 1; id - 1 })
         case l: Long => l
         case i: Int => i.toLong
         case other => throw new IllegalArgumentException(s"bad entity id $other")
@@ -153,13 +229,6 @@ object Transactor {
         case Retract(e, a, v) => (resolveE(e), a, v, txId, false)
         case m: MapForm => throw new IllegalStateException(s"unexpanded $m")
       }
-      appendFacts(facts)
-      val report = TxReport(txId, temps.toMap,
-        facts.map { case (e, a, v, t, ad) => (e, a, v, t, ad) })
-      reportFilters.foldLeft(report)((r, f) => f(r))
-    }
-
-    private def appendFacts(facts: Seq[(Long, String, Any, Long, Boolean)]): Unit = {
       val rows = facts.map { case (e, a, v, tx, added) =>
         val (vtype, vstr, vlong, vdbl, vts, vref) = v match {
           case EntityRef(id: Long) => ("r", null, null, null, null, java.lang.Long.valueOf(id))
@@ -173,24 +242,35 @@ object Transactor {
         }
         Row(e, a, vtype, vstr, vlong, vdbl, vts, vref, tx, added)
       }
-      val typesSeq = facts.map { case (_, a, v, _, _) =>
-        a -> (v match {
-          case EntityRef(_) => "vref"
-          case _: String => "vstr"
-          case _: Long | _: Int | _: Boolean => "vlong"
-          case _: Double => "vdbl"
-          case _: java.sql.Timestamp => "vts"
-        })
+      val delta = prior.delta ++ rows.map(toRow)
+      val deltaFrame = Bridge.rowsFrame(spark, FactStore.factSchema, delta, FoldRows)
+      committed = Committed(
+        FactDb(base.log.unionAll(deltaFrame), prior.db.attrTypes ++ types,
+          prior.db.cardMany, versioned = true),
+        delta,
+        prior.schema ++ rows.filter(r => Schema.Attrs.contains(r.getString(1))))
+      nextTx = txId + 1
+      nextId = id
+      TxReport(txId, temps.toMap, facts)
+    }
+
+    /** Attribute → value slot of a transaction's statements, checked
+      * against the slots already registered. graft types each attribute
+      * to ONE value slot — the deliberate trade (SURVEY §4) against the
+      * reference's cc-cmp total order over heterogeneous values
+      * (comparison.clj:91). A value whose slot disagrees with the
+      * attribute's registered slot would silently RETYPE the attribute
+      * and orphan its existing facts' pattern/sort path — reject the
+      * transaction loudly instead. */
+    private def checkSlots(stmts: Seq[TxStmt], registered: Map[String, String]): Map[String, String] = {
+      val typesSeq = stmts.map {
+        case Add(_, a, v) => a -> slotOf(v)
+        case Retract(_, a, v) => a -> slotOf(v)
+        case m: MapForm => throw new IllegalStateException(s"unexpanded $m")
       }
-      // graft types each attribute to ONE value slot — the deliberate
-      // trade (SURVEY §4) against the reference's cc-cmp total order
-      // over heterogeneous values (comparison.clj:91). A value whose
-      // slot disagrees with the attribute's registered slot would
-      // silently RETYPE the attribute and orphan its existing facts'
-      // pattern/sort path — reject the transaction loudly instead.
       typesSeq.groupBy(_._1).foreach { case (a, slots) =>
         val distinctSlots = slots.map(_._2).distinct
-        val prior = db.attrTypes.get(a)
+        val prior = registered.get(a)
         if (distinctSlots.size > 1 || prior.exists(_ != distinctSlots.head))
           throw new IllegalArgumentException(
             s"attribute $a is typed ${prior.getOrElse(distinctSlots.head)} but " +
@@ -198,11 +278,7 @@ object Transactor {
               "attributes hold one value type (no mixed-type cc-cmp ordering); " +
               "use a distinct attribute per value type")
       }
-      val types = typesSeq.toMap
-      val batch = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), FactStore.factSchema)
-      db = FactDb(db.log.unionAll(batch), db.attrTypes ++ types, db.cardMany,
-        versioned = true)
+      typesSeq.toMap
     }
   }
 
@@ -210,13 +286,16 @@ object Transactor {
   def emptySession(spark: SparkSession, firstTx: Long = 1L,
                    firstEntityId: Long = 1L,
                    clock: () => Long = () => System.currentTimeMillis()): Session = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], FactStore.factSchema)
+    // an empty local relation: the optimizer drops it from the union
+    // with the delta, so an empty session's log is the delta alone
+    val empty = Bridge.rowsFrame(spark, FactStore.factSchema, Vector.empty, FoldRows)
     new Session(spark, FactDb(empty, Map.empty), firstTx, firstEntityId, clock)
   }
 
-  /** Session over an existing db (e.g. bulk-melted base tables). */
+  /** Session over an existing db (e.g. bulk-melted base tables). Its
+    * schema ops are read from the base log here, once (one Spark job). */
   def session(spark: SparkSession, db: FactDb, firstTx: Long,
               firstEntityId: Long): Session =
-    new Session(spark, db, firstTx, firstEntityId)
+    new Session(spark, db, firstTx, firstEntityId,
+      baseSchema = Schema.History.of(db.log))
 }

@@ -4,9 +4,15 @@
  * internals since Spark 4's sql-api split). */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -70,6 +76,35 @@ object Bridge {
     internal.localCheckpoint()
     val n = internal.count()
     (spark.internalCreateDataFrame(internal, df.schema, isStreaming = false), n)
+  }
+
+  /** External row → compact catalyst row, converted once so every plan
+    * over the row reuses it as is. */
+  def rowConverter(schema: StructType): Row => UnsafeRow = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toUnsafe = UnsafeProjection.create(schema)
+    r => toUnsafe(toCatalyst(r).asInstanceOf[InternalRow]).copy()
+  }
+
+  /** A frame over driver-held catalyst rows as ONE plan leaf: a local
+    * relation up to `localMaxRows` rows, else one parallelized RDD of at
+    * most `defaultParallelism` partitions. The RDD leaf gets the local
+    * relation's own size estimate (row width from the schema × rows),
+    * so the planner's broadcast choices do not flip when a frame
+    * crosses over. Either way its partitions and plan leaves stay
+    * constant however many appends built `rows`. */
+  def rowsFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow],
+                localMaxRows: Int): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    val plan =
+      if (rows.size <= localMaxRows) LocalRelation(output, rows)
+      else {
+        val sc = session.sparkContext
+        LogicalRDD(output, sc.parallelize(rows, sc.defaultParallelism))(session,
+          Some(Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * rows.size)))
+      }
+    classic.Dataset.ofRows(session, plan)
   }
 
   /** Release the materialized RDD blocks behind a (local)checkpointed

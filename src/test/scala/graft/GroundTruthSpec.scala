@@ -689,9 +689,18 @@ class GroundTruthSpec extends SparkSpec {
     // BOTH serving paths must agree with the ground truth: the
     // post-trim driver Tarjan (default dispatch) and the distributed
     // coloring fixpoint (smallGraphEdges = 0 forces the 100× path)
-    def run(df: org.apache.spark.sql.DataFrame, small: Long) =
-      GraphOps.scc(df, smallGraphEdges = small)(spark)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Each call also pins that scc leaks no checkpoint: once the caller
+    // releases the checkpoints its result is built on, the session holds
+    // no more persistent RDDs than before the call.
+    def run(df: org.apache.spark.sql.DataFrame, small: Long) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = GraphOps.scc(df, smallGraphEdges = small)(spark)
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      org.apache.spark.sql.graft.Bridge.freeCheckpoint(out)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"scc (smallGraphEdges=$small) leaked checkpoints $leaked")
+      got
+    }
     for (small <- Seq(1L << 16, 0L)) {
       assert(run(edges, small) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
         4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))

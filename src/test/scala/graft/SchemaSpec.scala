@@ -95,7 +95,7 @@ class SchemaSpec extends SparkSpec {
     // ordering (comparison.clj:91). Retyping must fail loudly, not
     // silently orphan the attribute's existing facts.
     val session = Transactor.emptySession(spark, clock = () => 1000L)
-    session.transact(Seq(Transactor.Add("e1", "color", "red")))
+    val r0 = session.transact(Seq(Transactor.Add("e1", "color", "red")))
     // across transactions: string attr, long value
     val e = intercept[IllegalArgumentException] {
       session.transact(Seq(Transactor.Add("e2", "color", 7L)))
@@ -112,5 +112,10 @@ class SchemaSpec extends SparkSpec {
     // the failed transactions left no facts behind
     assert(session.db.log.filter(col("a") === "color").count() === 1)
     assert(session.db.log.filter(col("a") === "size").count() === 0)
+    // ...and consumed no ids: the next successful tx gets the id the
+    // first rejected one would have had, its entities the next free ids
+    val r1 = session.transact(Seq(Transactor.Add("e5", "color", "blue")))
+    assert(r1.txId === r0.txId + 1)
+    assert(r1.tempIds("e5") === r0.tempIds.values.max + 1)
   }
 }
