@@ -39,8 +39,9 @@ def main():
                          "read 50s in-run but 18s solo. Folded into "
                          "per_query as solo_sec/solo_ratio.")
     ap.add_argument("--stream-latency", default=None,
-                    help="STREAM_LATENCY.jsonl path; the LAST line per "
-                         "suite is folded in as streaming_latency.")
+                    help="target/STREAM_LATENCY.jsonl (written by "
+                         "StreamingSpec); the LAST line per suite is "
+                         "folded in as streaming_latency.")
     ap.add_argument("--note", action="append", default=[])
     ap.add_argument("-o", "--out", default=None)
     args = ap.parse_args()

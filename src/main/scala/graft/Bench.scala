@@ -112,13 +112,6 @@ object Bench {
     // so asynchronous block removal can't overlap (and steal execution
     // memory from) the NEXT measured sample; warm-up keeps the cheap
     // non-blocking form.
-    def dropCheckpoints(blocking: Boolean = false): Unit = {
-      val keep = graft.datalog.Compiler.protectedRddIds(spark) ++
-        graft.core.TestData.protectedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep(id) }
-        .values.foreach(_.unpersist(blocking))
-    }
     // MEMLOG diagnostic mode (SPARK_GRAFT_BENCH_MEMLOG=1): after every
     // query, force a full GC and print post-GC heap, broadcast-block
     // residency and RDD storage bytes to stderr — the instrumentation
@@ -139,7 +132,7 @@ object Bench {
     queriesToRun.foreach { name =>
       try SparkEntry.queries(name)(spark, sfDir).count(): Unit
       catch { case scala.util.control.NonFatal(_) => () } // surfaces in timed runs
-      dropCheckpoints()
+      graft.core.TestData.sweepUnprotectedRdds(spark, blocking = false)
       memLine(s"warmup:$name")
     }
     // n runs per query, report the per-query MEDIAN: single runs are
@@ -160,7 +153,7 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             Double.NaN
           }
-        dropCheckpoints(blocking = true) // outside the timer
+        graft.core.TestData.sweepUnprotectedRdds(spark, blocking = true) // outside the timer
         memLine(s"sample:$name")
         sample
       }

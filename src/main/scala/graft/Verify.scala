@@ -39,14 +39,10 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         // per-invocation localCheckpoint blocks must not accumulate
-        // across the 176-query dump (the Bench dropCheckpoints note);
+        // across the 176-query dump (the Bench sweep note);
         // the datalog fixpoint cache AND the melted fact-log persists
         // are spared (rebuild-per-query otherwise — the r13 regression)
-        val keep = graft.datalog.Compiler.protectedRddIds(spark) ++
-          graft.core.TestData.protectedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }
-          .values.foreach(_.unpersist(blocking = false))
+        graft.core.TestData.sweepUnprotectedRdds(spark, blocking = false)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

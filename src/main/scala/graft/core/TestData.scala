@@ -74,7 +74,7 @@ object TestData {
 
   /** Columnar-cache RDD ids backing LIVE dbCache entries for this
     * session. Harnesses that sweep persistent RDDs between queries
-    * (Bench/Verify dropCheckpoints) must SPARE these alongside
+    * ([[sweepUnprotectedRdds]]) must SPARE these alongside
     * Compiler.protectedRddIds: a swept `.persist` keeps its lineage, so
     * nothing FAILS — every later datalog/graph query silently re-pays the
     * 40-branch melt + RDD round-trip inside its own (timed) run instead
@@ -86,6 +86,17 @@ object TestData {
     dbCache.collect { case ((s, _, _), db) if s eq spark =>
       org.apache.spark.sql.graft.Bridge.cachedRddIds(db.log)
     }.flatten.toSet
+
+  /** Unpersist every persistent RDD of the session except the two
+    * bounded session artifacts a between-queries sweep must spare:
+    * [[graft.datalog.Compiler.protectedRddIds]] (the fixpoint cache)
+    * and [[protectedRddIds]] (the melted fact logs). */
+  def sweepUnprotectedRdds(spark: SparkSession, blocking: Boolean): Unit = {
+    val keep = graft.datalog.Compiler.protectedRddIds(spark) ++ protectedRddIds(spark)
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => keep(id) }
+      .values.foreach(_.unpersist(blocking))
+  }
 
   /** Materialize a fact log with a TRUNCATED logical plan: the melted
     * 40-branch union otherwise makes Catalyst hit its 100-iteration

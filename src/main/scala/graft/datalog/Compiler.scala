@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   *    partition of the fact log before any join;
   *  - conjunction joins key on shared variables (usually the entity
   *    id), which matches the fact log's bucketing column;
-  *  - recursive rules run semi-naive (delta-only joins) with
-  *    localCheckpoint every few iterations to keep lineage flat.
+  *  - recursive rules run semi-naive (delta-only joins), and every
+  *    round's delta is localCheckpointed to keep lineage flat.
   */
 object Compiler {
 
@@ -361,27 +361,12 @@ object Compiler {
     }
   }
 
-  private def referencesRule(c: Clause, name: String): Boolean = c match {
-    case RuleApp(n, _*) => n == name
-    case And(cs @ _*) => cs.exists(referencesRule(_, name))
-    case Or(cs @ _*) => cs.exists(referencesRule(_, name))
-    case Not(n) => referencesRule(n, name)
-    case _ => false
-  }
-
-  /** Materialize a rule as a relation over its head params. Recursive
-    * rules run semi-naive: each iteration joins only the previous delta
-    * against the recursive bodies, unions new tuples, and stops at
-    * fixpoint. This is the distributed replacement for the reference's
-    * per-frame rule re-application (query.clj:260-274), which re-enters
-    * the interpreter once per candidate frame.
-    */
   /** Rules whose materialization is currently on the call stack — a
-    * re-entry here is an internal error: mutual-recursion cycles are
-    * detected up front ([[ruleGroup]]) and run as ONE simultaneous
-    * fixpoint, during which every group member is pre-bound in the
-    * cache, so the RuleApp path never recurses back in. Thread-local:
-    * compilation is single-threaded per query. */
+    * re-entry here is an internal error: recursion cycles are detected
+    * up front ([[ruleGroup]]) and run as ONE simultaneous fixpoint,
+    * during which every group member is pre-bound in the cache, so the
+    * RuleApp path never recurses back in. Thread-local: compilation is
+    * single-threaded per query. */
   private val materializing = new ThreadLocal[collection.mutable.Set[String]] {
     override def initialValue(): collection.mutable.Set[String] =
       collection.mutable.Set.empty[String]
@@ -396,9 +381,9 @@ object Compiler {
     finally materializing.get.remove(name)
   }
 
-  /** The mutual-recursion GROUP containing `name`: the strongly
-    * connected component of the rule-reference graph. Size 1 = plain
-    * self- or non-recursion (the common case). */
+  /** The recursion GROUP containing `name`: the strongly connected
+    * component of the rule-reference graph. Size 1 = plain self- or
+    * non-recursion (the common case). */
   private def ruleGroup(name: String, rules: Map[String, Seq[Rule]]): Set[String] = {
     def deps(n: String): Set[String] =
       rules.get(n).fold(Set.empty[String])(ds => ruleDeps(ds.map(_.body)))
@@ -414,129 +399,93 @@ object Compiler {
     fwd.filter(m => reach(m).contains(name)) + name
   }
 
+  /** Materialize a rule as a relation over its head params. A
+    * non-recursive rule is the union of its definitions, left as an
+    * unmaterialized plan so it fuses into the enclosing query for
+    * pushdown (see dl_q5). A recursive rule — self-recursive or a
+    * member of a cycle — runs its group's semi-naive fixpoint
+    * ([[groupFixpoint]]): the distributed replacement for the
+    * reference's per-frame rule re-application (query.clj:260-274). */
   private def ruleRelationImpl(db: Db, name: String, rules: Map[String, Seq[Rule]],
                                cache: collection.mutable.Map[String, DataFrame])
                               (implicit spark: SparkSession): DataFrame = {
     val defs = rules.getOrElse(name,
       throw new IllegalArgumentException(s"unknown rule $name"))
     val group = ruleGroup(name, rules)
-    if (group.size > 1) {
-      // mutually recursive cycle: ONE simultaneous fixpoint computes
-      // every member; each member's relation is cached under its own
-      // key so siblings (and later queries) reuse without rebuilding
-      val groupSeq = group.toSeq.sorted
-      val depDefs = (groupSeq.flatMap(n =>
-          ruleDepsTransitive(rules(n).map(_.body), rules)).toSet ++ group)
-        .toSeq.sorted.flatMap(n => rules.getOrElse(n, Nil))
-      def keyFor(n: String) = (spark, db, s"group:${groupSeq.mkString(",")}:$n", depDefs)
-      return fixpointCached(keyFor(name), {
-        val totals = groupFixpoint(db, groupSeq, rules, cache)
-        groupSeq.filter(_ != name).foreach(m => fixpointPut(keyFor(m), totals(m)))
-        totals(name)
-      })
-    }
-    val params = defs.head.params.map(_.name)
-    val (recDefs, baseDefs) = defs.partition(d => referencesRule(d.body, name))
-
-    def evalDef(d: Rule, self: Option[DataFrame]): DataFrame = {
-      // Share the outer cache so sibling rules (e.g. the non-recursive
-      // `parent` inside `anc`'s body) materialize ONCE across fixpoint
-      // iterations; only this rule's own name is temporarily bound to
-      // the current delta (semi-naive), then restored.
-      val saved = cache.get(name)
-      self.foreach(s => cache(name) = s)
-      try {
-        // Rule-local variable scope: evaluate the body standalone, then
-        // project to head params (reference renames vars per application,
-        // query.clj:238-258; a fresh frame context gives the same isolation).
-        val body = eval(db, d.body, rules, cache, None)
-          .getOrElse(throw new IllegalArgumentException(s"rule $name body binds nothing"))
-        body.select(d.params.map(p => col(p.name)): _*).distinct()
-      } finally {
-        saved match {
-          case Some(v) => cache(name) = v
-          case None => cache.remove(name)
-        }
-      }
-    }
-
-    if (recDefs.isEmpty) {
-      baseDefs.map(evalDef(_, None)).reduce(_ unionAll _).distinct()
-    } else fixpointCached(
-      // A fixpoint's result is a union of checkpointed deltas — already
-      // materialized, so it is safely shareable ACROSS queries in the
-      // session. Key: db identity (fact logs are session-cached
-      // objects), the rule's name, and the full definition set of the
-      // rule + its TRANSITIVE dependencies (structural equality on the
-      // AST) — a query redefining any involved rule, at any depth,
-      // computes its own.
-      (spark, db, name,
-        (ruleDepsTransitive(defs.map(_.body), rules) + name).toSeq.sorted
-          .flatMap(n => rules.getOrElse(n, Nil))), {
-      require(baseDefs.nonEmpty, s"recursive rule $name needs a base case")
-      // Materialize sibling rule relations (e.g. the non-recursive
-      // `parent` inside `anc`'s body) ONCE before iterating: each hop
-      // re-executes the recursive bodies, and an unmaterialized sibling
-      // would be recomputed from its base scans every iteration.
-      // (Outside a fixpoint, rule relations stay unmaterialized plans so
-      // they fuse into the enclosing query for pushdown — see dl_q5.)
-      ruleDeps(defs.map(_.body)).diff(Set(name))
-        .filter(n => rules.contains(n) && rules(n).exists(d => hasPattern(d.body)))
-        .foreach { n =>
-          val rel = cache.getOrElseUpdate(n, ruleRelation(db, n, rules, cache))
-          cache(n) = rel.localCheckpoint(eager = true)
-        }
-      // Semi-naive fixpoint, one materializing job per hop:
-      //  - ONLY the delta is ever checkpointed (it is needed as an RDD
-      //    for the emptiness check anyway);
-      //  - the accumulated closure stays a UNION TREE of checkpointed
-      //    deltas — never re-materialized, so per-hop work is
-      //    O(delta ⋈ body + anti-join scan), not O(closure) writes;
-      //  - the emptiness check is a count over the just-checkpointed
-      //    delta partitions (no extra computation).
-      // evalDef outputs are already distinct per definition, so a
-      // single-definition delta needs no extra dedup shuffle — only
-      // multi-definition unions do.
-      def dedupIfUnion(parts: Seq[DataFrame]): DataFrame =
-        if (parts.size == 1) parts.head else parts.reduce(_ unionAll _).distinct()
-      var delta = dedupIfUnion(baseDefs.map(evalDef(_, None)))
-        .localCheckpoint(eager = true)
-      val deltas = collection.mutable.ArrayBuffer(delta)
-      var total = delta
-      var n = delta.count()
-      var i = 0
-      val maxIter = 100
-      while (n > 0 && i < maxIter) {
-        val expanded = dedupIfUnion(recDefs.map(evalDef(_, Some(delta))))
-        delta = expanded.join(total, joinCond(expanded, total, params), "left_anti")
-          .localCheckpoint(eager = true)
-        n = delta.count()
-        if (n > 0) { deltas += delta; total = deltas.reduce(_ unionAll _) }
-        i += 1
-      }
-      require(n == 0, s"rule $name did not reach fixpoint in $maxIter iterations")
-      total
+    if (group.size == 1 && !ruleDeps(defs.map(_.body)).contains(name))
+      return defs.map(evalBound(db, name, _, rules, cache, Map.empty))
+        .reduce(_ unionAll _).distinct()
+    // A fixpoint's result is a union of checkpointed deltas — already
+    // materialized, so it is safely shareable ACROSS queries in the
+    // session. Key: db identity (fact logs are session-cached objects),
+    // the group and member, and the full definition set of the group +
+    // its TRANSITIVE dependencies (structural equality on the AST) — a
+    // query redefining any involved rule, at any depth, computes its
+    // own. Every member's relation is cached under its own key, so
+    // siblings (and later queries) reuse it without rebuilding.
+    val groupSeq = group.toSeq.sorted
+    val depDefs = (groupSeq.flatMap(n =>
+        ruleDepsTransitive(rules(n).map(_.body), rules)).toSet ++ group)
+      .toSeq.sorted.flatMap(n => rules.getOrElse(n, Nil))
+    def keyFor(n: String) = (spark, db, s"group:${groupSeq.mkString(",")}:$n", depDefs)
+    fixpointCached(keyFor(name), {
+      val totals = groupFixpoint(db, groupSeq, rules, cache)
+      groupSeq.filter(_ != name).foreach(m => fixpointPut(keyFor(m), totals(m)))
+      totals(name)
     })
   }
 
-  /** Simultaneous fixpoint over a mutually recursive rule group —
-    * the stratum-level evaluation classic Datalog engines run (and the
-    * reference interpreter cannot: its per-frame re-entry diverges on
-    * rule cycles). Each member keeps its own total/delta; per round:
+  /** Evaluate one definition of rule `name` with rule names in
+    * `bindings` bound to the given relations (a fixpoint's deltas or
+    * totals), then restore the cache. Rule-local variable scope: the
+    * body is evaluated standalone, then projected to the head params
+    * (reference renames vars per application, query.clj:238-258; a
+    * fresh frame context gives the same isolation). Heads are aligned
+    * BY POSITION to the rule's first definition, whose names the
+    * RuleApp path and the fixpoint's anti-joins key on. */
+  private def evalBound(db: Db, name: String, d: Rule, rules: Map[String, Seq[Rule]],
+                        cache: collection.mutable.Map[String, DataFrame],
+                        bindings: Map[String, DataFrame])
+                       (implicit spark: SparkSession): DataFrame = {
+    val head = rules(name).head.params.map(_.name)
+    require(d.params.length == head.length,
+      s"rule $name definitions disagree on arity")
+    val saved = bindings.keys.map(k => k -> cache.get(k)).toMap
+    bindings.foreach { case (k, v) => cache(k) = v }
+    try {
+      val body = eval(db, d.body, rules, cache, None)
+        .getOrElse(throw new IllegalArgumentException(s"rule $name body binds nothing"))
+      body.select(d.params.zip(head).map { case (p, h) =>
+        if (p.name == h) col(p.name) else col(p.name).as(h)
+      }: _*).distinct()
+    } finally saved.foreach {
+      case (k, Some(v)) => cache(k) = v
+      case (k, None) => cache.remove(k): Unit
+    }
+  }
+
+  /** Simultaneous semi-naive fixpoint over a recursive rule's group
+    * (one self-recursive rule or a cycle) — the stratum-level
+    * evaluation classic Datalog engines run (and the reference
+    * interpreter cannot: its per-frame re-entry diverges on rule
+    * cycles). Each member keeps its own total/delta; per round:
     *  - a body with exactly ONE group reference runs SEMI-NAIVE (that
     *    reference bound to the member's last delta — skipped entirely
     *    when the delta is empty);
-    *  - a body with ≥2 group references (rare) runs naive against the
-    *    members' full totals — still convergent, since anti-joins keep
-    *    only new tuples;
+    *  - a body with ≥2 group references (non-linear, e.g.
+    *    `tc(x,y) :- tc(x,m), tc(m,y)`) runs naive against the members'
+    *    full totals — still convergent, since anti-joins keep only new
+    *    tuples;
     *  - all new deltas anti-join their member's total; the round's
     *    deltas land together, so derivations can ping-pong between
     *    members (a→b→a) one round per hop.
-    * Totals stay union trees of checkpointed deltas (the frontier
-    * discipline every iterative operator here shares); rounds = the
-    * longest derivation chain through the cycle. Negated references
-    * INTO the cycle are rejected: non-stratified negation has no
-    * well-defined fixpoint semantics. */
+    * One materializing job per delta: ONLY deltas are checkpointed
+    * (needed as RDDs for the emptiness count anyway), and totals stay
+    * union trees of checkpointed deltas, never re-materialized, so a
+    * round costs O(delta ⋈ body + anti-join scan), not O(closure)
+    * writes. Rounds = the longest derivation chain through the group.
+    * Negated references INTO the group are rejected: non-stratified
+    * negation has no well-defined fixpoint semantics. */
   private def groupFixpoint(db: Db, group: Seq[String], rules: Map[String, Seq[Rule]],
                             cache: collection.mutable.Map[String, DataFrame])
                            (implicit spark: SparkSession): Map[String, DataFrame] = {
@@ -560,8 +509,10 @@ object Compiler {
         s"rule $n negates a member of its own recursion cycle " +
           s"(${group.mkString(", ")}): non-stratified negation is not supported")))
     val paramsOf = group.map(n => n -> rules(n).head.params.map(_.name)).toMap
-    // materialize non-group sibling deps once (shared with the
-    // single-rule fixpoint's discipline)
+    // Materialize non-group sibling deps (e.g. the non-recursive
+    // `parent` inside `anc`'s body) ONCE before iterating: every round
+    // re-executes the recursive bodies, and an unmaterialized sibling
+    // would be recomputed from its base scans each time.
     group.foreach { n =>
       ruleDeps(rules(n).map(_.body)).diff(groupSet)
         .filter(m => rules.contains(m) && rules(m).exists(d => hasPattern(d.body)))
@@ -569,18 +520,6 @@ object Compiler {
           val rel = cache.getOrElseUpdate(m, ruleRelation(db, m, rules, cache))
           cache(m) = rel.localCheckpoint(eager = true)
         }
-    }
-    def evalBound(n: String, d: Rule, bindings: Map[String, DataFrame]): DataFrame = {
-      val saved = bindings.keys.map(k => k -> cache.get(k)).toMap
-      bindings.foreach { case (k, v) => cache(k) = v }
-      try {
-        val body = eval(db, d.body, rules, cache, None)
-          .getOrElse(throw new IllegalArgumentException(s"rule $n body binds nothing"))
-        body.select(d.params.map(p => col(p.name)): _*).distinct()
-      } finally saved.foreach {
-        case (k, Some(v)) => cache(k) = v
-        case (k, None) => cache.remove(k): Unit
-      }
     }
     def union(parts: Seq[DataFrame]): DataFrame =
       if (parts.size == 1) parts.head else parts.reduce(_ unionAll _).distinct()
@@ -592,13 +531,14 @@ object Compiler {
       val bases = rules(n).filter(d => refs(d.body) == 0)
       if (bases.isEmpty) n -> None
       else {
-        val d0 = union(bases.map(evalBound(n, _, Map.empty))).localCheckpoint(true)
+        val d0 = union(bases.map(evalBound(db, n, _, rules, cache, Map.empty)))
+          .localCheckpoint(true)
         parts(n) += d0
         n -> Some(d0)
       }
     }.toMap
     require(deltas.values.exists(_.isDefined),
-      s"mutually recursive group ${group.mkString(", ")} needs at least one base case")
+      s"recursive rule group ${group.mkString(", ")} needs at least one base case")
     var active = deltas.map { case (n, od) => n -> od.fold(0L)(_.count()) }
     var i = 0
     val maxIter = 100
@@ -610,14 +550,15 @@ object Compiler {
           if (refs(d.body) == 1) {
             val m = names.head
             deltas(m) match {
-              case Some(dm) if active(m) > 0 => Seq(evalBound(n, d, Map(m -> dm)))
+              case Some(dm) if active(m) > 0 =>
+                Seq(evalBound(db, n, d, rules, cache, Map(m -> dm)))
               case _ => Nil
             }
           } else {
             val binds = names.toSeq.flatMap(m => totalOf(m).map(m -> _)).toMap
             // a referenced member with no tuples yet cannot satisfy the
             // body — skip this round, re-tried once it derives some
-            if (binds.size < names.size) Nil else Seq(evalBound(n, d, binds))
+            if (binds.size < names.size) Nil else Seq(evalBound(db, n, d, rules, cache, binds))
           }
         }
         if (expandedParts.isEmpty) n -> None
@@ -635,10 +576,10 @@ object Compiler {
       deltas = next
     }
     require(active.values.sum == 0,
-      s"mutually recursive group ${group.mkString(", ")} did not reach fixpoint in $maxIter rounds")
+      s"recursive rule group ${group.mkString(", ")} did not reach fixpoint in $maxIter rounds")
     group.map { n =>
       n -> totalOf(n).getOrElse(throw new IllegalArgumentException(
-        s"rule $n derives no tuples: in a mutual-recursion group every member " +
+        s"rule $n derives no tuples: in a recursion group every member " +
           "must be reachable from some base case"))
     }.toMap
   }

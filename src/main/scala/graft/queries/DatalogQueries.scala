@@ -190,7 +190,8 @@ object DatalogQueries {
 
     // Recursive transitive closure over a binary-tree parent edge derived
     // from nation keys: parent(x) = floor((x-1)/2). Exercises the
-    // semi-naive fixpoint (reference rules, query.clj:260-274).
+    // semi-naive fixpoint (reference rules, query.clj:260-274) as a
+    // recursive rule's group of one (Compiler.groupFixpoint).
     "dl_rule_rec" -> q(static, Query(
       find = Seq(FVar(V("x"), "child"), FVar(V("y"), "anc")),
       where = RuleApp("anc", V("x"), V("y")),
@@ -210,7 +211,8 @@ object DatalogQueries {
     // MUTUALLY recursive rules (odd/even ancestor parity over the
     // nation parent tree) — the rule-cycle form the reference
     // interpreter diverges on; graft runs the cycle as ONE
-    // simultaneous semi-naive fixpoint (Compiler.groupFixpoint).
+    // simultaneous semi-naive fixpoint over the recursive rules' group
+    // (Compiler.groupFixpoint).
     "dl_rule_mutual" -> q(static, Query(
       find = Seq(FVar(V("x"), "child"), FVar(V("y"), "odd_anc")),
       where = RuleApp("odd", V("x"), V("y")),

@@ -63,13 +63,9 @@ object ProfileQuery {
     // warm pass (JIT, codegen, session sidecars)
     graft.SparkEntry.queries(name)(spark, sfDir).count(): Unit
     // sweep per-invocation persists between passes exactly like the
-    // bench's dropCheckpoints — without this, the measured pass runs
+    // bench's sweep — without this, the measured pass runs
     // under the warm pass's leftover blocks (GC-storm artifact).
-    val keep = graft.datalog.Compiler.protectedRddIds(spark) ++
-      graft.core.TestData.protectedRddIds(spark)
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => keep(id) }
-      .values.foreach(_.unpersist(true))
+    graft.core.TestData.sweepUnprotectedRdds(spark, blocking = true)
     Thread.sleep(500)
     record = true
     val t0 = System.nanoTime()

@@ -289,20 +289,69 @@ class CompilerSpec extends SparkSpec {
     assert(even === expectEven)
   }
 
+  /** A `next` chain 0 -> 1 -> ... -> nodes-1 (entity ids 200 + i). */
+  private def nextChain(nodes: Int): Db =
+    mkDb((0 until nodes - 1).map(i => r(200L + i, "next", 200L + i + 1)), Map("next" -> "vref"))
+
+  private def pairsOf(db: Db, rule: String, rules: Seq[Rule]): Set[(Long, Long)] =
+    Compiler.run(db, Query(
+      find = Seq(FVar(V("x"), "x"), FVar(V("y"), "y")),
+      where = RuleApp(rule, V("x"), V("y")), rules = rules))
+      .collect().map(row => (row.getLong(0) - 200, row.getLong(1) - 200)).toSet
+
+  private def chainClosure(nodes: Int): Set[(Long, Long)] =
+    (for (i <- 0L until nodes; j <- i + 1 until nodes) yield (i, j)).toSet
+
+  test("non-linear recursion: tc(x,y) :- tc(x,m), tc(m,y) closes a 9-node chain") {
+    // both body references are the recursive rule itself: binding each
+    // to the last delta alone would miss pairs like (0,3) = (0,2)+(2,3)
+    val closure = pairsOf(nextChain(9), "tc", Seq(
+      Rule("tc", Seq(V("x"), V("y")), Pattern(V("x"), C("next"), V("y"))),
+      Rule("tc", Seq(V("x"), V("y")), And(
+        RuleApp("tc", V("x"), V("m")),
+        RuleApp("tc", V("m"), V("y"))))))
+    assert(closure.size === 36)
+    assert(closure === chainClosure(9))
+  }
+
+  test("recursive rule definitions may name their head variables differently") {
+    // heads align by position: the second definition's (a, c) is the
+    // first definition's (x, y)
+    val closure = pairsOf(nextChain(6), "tc", Seq(
+      Rule("tc", Seq(V("x"), V("y")), Pattern(V("x"), C("next"), V("y"))),
+      Rule("tc", Seq(V("a"), V("c")), And(
+        Pattern(V("a"), C("next"), V("b")),
+        RuleApp("tc", V("b"), V("c"))))))
+    assert(closure.size === 15)
+    assert(closure === chainClosure(6))
+  }
+
   test("mutual recursion rejects non-stratified negation with a clear error") {
     val db = Compiler.Db(graft.core.TestData.eventsDb(spark, "/root/testdata/sf0.001"))
-    val err = intercept[IllegalArgumentException] {
-      Compiler.run(db, Query(
-        find = Seq(FVar(V("x"), "x"), FVar(V("y"), "y")),
-        where = RuleApp("a", V("x"), V("y")),
-        rules = Seq(
-          Rule("a", Seq(V("p"), V("q")), Pattern(V("p"), C("last_value"), V("q"))),
-          Rule("a", Seq(V("p"), V("q")), And(
-            RuleApp("b", V("p"), V("q")),
-            Not(RuleApp("b", V("q"), V("p"))))),
-          Rule("b", Seq(V("p"), V("q")), RuleApp("a", V("p"), V("q"))))))(spark)
+    val inputs = Seq(
+      // a cycle a -> b -> a whose body negates b
+      db -> Seq(
+        Rule("a", Seq(V("p"), V("q")), Pattern(V("p"), C("last_value"), V("q"))),
+        Rule("a", Seq(V("p"), V("q")), And(
+          RuleApp("b", V("p"), V("q")),
+          Not(RuleApp("b", V("q"), V("p"))))),
+        Rule("b", Seq(V("p"), V("q")), RuleApp("a", V("p"), V("q")))),
+      // a group of one negating itself
+      nextChain(6) -> Seq(
+        Rule("a", Seq(V("x"), V("y")), Pattern(V("x"), C("next"), V("y"))),
+        Rule("a", Seq(V("x"), V("y")), And(
+          Pattern(V("x"), C("next"), V("m")),
+          Pattern(V("m"), C("next"), V("y")),
+          Not(RuleApp("a", V("m"), V("y")))))))
+    inputs.foreach { case (inputDb, rules) =>
+      val err = intercept[IllegalArgumentException] {
+        Compiler.run(inputDb, Query(
+          find = Seq(FVar(V("x"), "x"), FVar(V("y"), "y")),
+          where = RuleApp("a", V("x"), V("y")),
+          rules = rules))(spark)
+      }
+      assert(err.getMessage.contains("non-stratified negation"))
     }
-    assert(err.getMessage.contains("non-stratified negation"))
   }
 
   test("recursive rule terminates on a cyclic graph (closure of a 3-cycle)") {

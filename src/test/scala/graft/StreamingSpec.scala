@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Append a per-batch wall-time record to STREAM_LATENCY.jsonl at the
-    * repo root — one line per run per suite, so sidecar-publishing
-    * streams get a round-over-round latency trendline (VERDICT r13
-    * item 8; scale_report folds the tail into the round artifacts). */
+  /** Append a per-batch wall-time record to target/STREAM_LATENCY.jsonl
+    * (a build output, never a tracked file) — one line per run per
+    * suite, so sidecar-publishing streams get a latency trendline
+    * (scale_report's --stream-latency folds in the last line per suite). */
   private def recordLatency(suite: String, b0: Double, b1: Double): Unit =
     try {
       val line =
         f"""{"suite":"$suite","b0_sec":$b0%.3f,"b1_sec":$b1%.3f,"utc":"${java.time.Instant.now}"}%n"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("STREAM_LATENCY.jsonl"),
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+      java.nio.file.Files.write(java.nio.file.Paths.get("target", "STREAM_LATENCY.jsonl"),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
@@ -897,17 +898,7 @@ class StreamingSpec extends SparkSpec {
     }
     val (t0s, t1s) = (timedBatch(b0), timedBatch(b1))
     info(f"stream_curation per-batch wall time: b0=$t0s%.2fs b1=$t1s%.2fs")
-    // persist the latency so the round artifacts keep a trendline
-    // (VERDICT r12 item 8): appended, one line per run, to
-    // STREAM_LATENCY.jsonl at the repo root — scale_report / the
-    // round-close notes fold the tail into STREAM_r{N}/SCALE_r{N}
-    try {
-      val line = f"""{"suite":"stream_curation","b0_sec":$t0s%.3f,"b1_sec":$t1s%.3f,"utc":"${java.time.Instant.now}"}%n"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("STREAM_LATENCY.jsonl"),
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case scala.util.control.NonFatal(_) => () }
+    recordLatency("stream_curation", t0s, t1s)
     q.stop()
     // 1. final packed corpus == the BATCH pipeline on the same data:
     //    shared gates, then exact dedup (min doc_id per content hash —
