@@ -1,6 +1,6 @@
 package graft.datalog
 
-import graft.core.FactDb
+import graft.core.{FactDb, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   *    partition of the fact log before any join;
   *  - conjunction joins key on shared variables (usually the entity
   *    id), which matches the fact log's bucketing column;
-  *  - recursive rules run semi-naive (delta-only joins), and every
-  *    round's delta is localCheckpointed to keep lineage flat.
+  *  - recursive rules run semi-naive (delta-only joins) on
+  *    `graft.core.Fixpoint`.
   */
 object Compiler {
 
@@ -479,11 +479,9 @@ object Compiler {
     *  - all new deltas anti-join their member's total; the round's
     *    deltas land together, so derivations can ping-pong between
     *    members (a→b→a) one round per hop.
-    * One materializing job per delta: ONLY deltas are checkpointed
-    * (needed as RDDs for the emptiness count anyway), and totals stay
-    * union trees of checkpointed deltas, never re-materialized, so a
-    * round costs O(delta ⋈ body + anti-join scan), not O(closure)
-    * writes. Rounds = the longest derivation chain through the group.
+    * The rounds run on [[Fixpoint.semiNaiveGroup]], so a round costs
+    * O(delta ⋈ body + anti-join scan), not O(closure) writes. Rounds =
+    * the longest derivation chain through the group.
     * Negated references INTO the group are rejected: non-stratified
     * negation has no well-defined fixpoint semantics. */
   private def groupFixpoint(db: Db, group: Seq[String], rules: Map[String, Seq[Rule]],
@@ -523,62 +521,40 @@ object Compiler {
     }
     def union(parts: Seq[DataFrame]): DataFrame =
       if (parts.size == 1) parts.head else parts.reduce(_ unionAll _).distinct()
-    val parts = group.map(n => n -> collection.mutable.ArrayBuffer.empty[DataFrame]).toMap
-    def totalOf(n: String): Option[DataFrame] =
-      if (parts(n).isEmpty) None else Some(parts(n).reduce(_ unionAll _))
+    val loop = s"rule ${group.mkString(",")}"
     // round 0: base definitions (no group references)
-    var deltas: Map[String, Option[DataFrame]] = group.map { n =>
+    val seeds = group.flatMap { n =>
       val bases = rules(n).filter(d => refs(d.body) == 0)
-      if (bases.isEmpty) n -> None
-      else {
-        val d0 = union(bases.map(evalBound(db, n, _, rules, cache, Map.empty)))
-          .localCheckpoint(true)
-        parts(n) += d0
-        n -> Some(d0)
-      }
+      if (bases.isEmpty) None
+      else Some(n -> Fixpoint.materialize(loop,
+        union(bases.map(evalBound(db, n, _, rules, cache, Map.empty)))))
     }.toMap
-    require(deltas.values.exists(_.isDefined),
+    require(seeds.nonEmpty,
       s"recursive rule group ${group.mkString(", ")} needs at least one base case")
-    var active = deltas.map { case (n, od) => n -> od.fold(0L)(_.count()) }
-    var i = 0
-    val maxIter = 100
-    while (active.values.sum > 0 && i < maxIter) {
-      i += 1
-      val next = group.map { n =>
+    val parts = Fixpoint.semiNaiveGroup(loop, seeds, maxRounds = 100) { (deltas, totals) =>
+      group.flatMap { n =>
         val expandedParts = rules(n).filter(d => refs(d.body) > 0).flatMap { d =>
           val names = ruleDeps(Seq(d.body)).intersect(groupSet)
-          if (refs(d.body) == 1) {
-            val m = names.head
-            deltas(m) match {
-              case Some(dm) if active(m) > 0 =>
-                Seq(evalBound(db, n, d, rules, cache, Map(m -> dm)))
-              case _ => Nil
-            }
-          } else {
-            val binds = names.toSeq.flatMap(m => totalOf(m).map(m -> _)).toMap
+          if (refs(d.body) == 1)
+            deltas.get(names.head).map(dm =>
+              evalBound(db, n, d, rules, cache, Map(names.head -> dm))).toSeq
+          else {
+            val binds = names.toSeq.flatMap(m => totals.get(m).map(m -> _)).toMap
             // a referenced member with no tuples yet cannot satisfy the
             // body — skip this round, re-tried once it derives some
             if (binds.size < names.size) Nil else Seq(evalBound(db, n, d, rules, cache, binds))
           }
         }
-        if (expandedParts.isEmpty) n -> None
+        if (expandedParts.isEmpty) None
         else {
           val expanded = union(expandedParts)
-          val nd = totalOf(n) match {
-            case Some(t) => expanded.join(t, joinCond(expanded, t, paramsOf(n)), "left_anti")
-            case None => expanded
-          }
-          n -> Some(nd.localCheckpoint(eager = true))
+          Some(n -> totals.get(n).fold(expanded)(t =>
+            expanded.join(t, joinCond(expanded, t, paramsOf(n)), "left_anti")))
         }
       }.toMap
-      active = next.map { case (n, od) => n -> od.fold(0L)(_.count()) }
-      next.foreach { case (n, od) => if (active(n) > 0) parts(n) += od.get }
-      deltas = next
     }
-    require(active.values.sum == 0,
-      s"recursive rule group ${group.mkString(", ")} did not reach fixpoint in $maxIter rounds")
     group.map { n =>
-      n -> totalOf(n).getOrElse(throw new IllegalArgumentException(
+      n -> parts.get(n).map(_.reduce(_ unionAll _)).getOrElse(throw new IllegalArgumentException(
         s"rule $n derives no tuples: in a recursion group every member " +
           "must be reachable from some base case"))
     }.toMap

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.core.FactDb
+import graft.core.{FactDb, Fixpoint}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,79 +50,62 @@ object GraphOps {
     * all-pairs. Backward processes levels in DESCENDING order:
     * δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w)·(1+δ(w)) — one join per level
     * touching only that level's rows. Betweenness(v) = Σ_pivots δ(v),
-    * endpoints excluded. Per-level frontiers are localCheckpointed
-    * (flat lineage, reused by the backward pass without recompute). */
+    * endpoints excluded. The forward pass is a [[Fixpoint.semiNaive]]
+    * loop whose parts are the levels (materialised once, reused by the
+    * backward pass without recompute). */
   def betweenness(edgeDf: DataFrame, pivots: Seq[Long], maxIter: Int = 50)
                  (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    // forward BFS levels: levels(d) = (s, node, sigma) at distance d
-    var frontier = pivots.toDF("s")
-      .select(col("s"), col("s").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    val levels = collection.mutable.ArrayBuffer(frontier)
-    // ONE maintained checkpointed settled frame, updated per level:
-    // re-reducing the union of ALL levels each iteration grows the
-    // anti-join's plan O(depth²) — fine on shallow fixtures, a real
-    // cost on high-diameter graphs (BetweennessScaleProbe path mode
-    // pins flat per-level cost). The SUPERSEDED settled copy is
-    // released once its successor materializes (the new checkpoint is
-    // a full copy): without the release, checkpointed storage grows
-    // O(depth × |settled|) — O(n²) rows on exactly the path graphs
-    // the maintained frame exists for. The final settled is released
-    // after the loop (the backward pass reads only `levels`).
-    var settled = frontier.select("s", "node").localCheckpoint(true)
-    var d = 0
-    while (!frontier.isEmpty && d < maxIter) {
-      d += 1
-      val next = frontier.join(edges, frontier("node") === edges("src"))
+    // forward BFS levels: levels(d) = (s, node, sigma) at distance d;
+    // the settled set is the union of the levels so far
+    val levels = Fixpoint.semiNaive("betweenness", Fixpoint.materialize("betweenness",
+        pivots.toDF("s").select(col("s"), col("s").as("node"), lit(1L).as("sigma"))),
+        maxIter) { (frontier, settled) =>
+      frontier.join(edges, frontier("node") === edges("src"))
         .select(frontier("s"), edges("dst").as("node"), col("sigma"))
-        .join(settled, Seq("s", "node"), "left_anti")
+        .join(settled.select("s", "node"), Seq("s", "node"), "left_anti")
         .groupBy(col("s"), col("node")).agg(sum(col("sigma")).as("sigma"))
-        .localCheckpoint(true)
-      frontier = next
-      if (!next.isEmpty) {
-        levels += next
-        val prev = settled
-        settled = settled.unionAll(next.select("s", "node"))
-          .localCheckpoint(true)
-        Bridge.freeCheckpoint(prev)
-      }
     }
-    Bridge.freeCheckpoint(settled)
-    require(frontier.isEmpty,
-      s"betweenness BFS did not converge in $maxIter levels")
-    // backward: δ at the deepest level is 0; walk levels upward. Each
-    // level pays one (v)-edge join + one (s,w) successor join over
-    // only that level's rows; shallower δs depend only on the level
-    // directly below, so one checkpointed frame rides the loop.
     val maxLevel = levels.size - 1
-    var deltaAbove = levels(maxLevel).withColumn("delta", lit(0.0))
-      .localCheckpoint(true)
-    val contribs = collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (maxLevel >= 1) contribs += deltaAbove.select(col("node"), col("delta"))
-    for (lvl <- (maxLevel - 1) to 1 by -1) {
-      val cur = levels(lvl)
-        .select(col("s"), col("node").as("v"), col("sigma").as("sigma_v"))
-      val succ = deltaAbove.select(col("s"), col("node").as("w"),
-        col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      val e = edges.select(col("src").as("v"), col("dst").as("w"))
-      // δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w)·(1+δ(w)); a shortest-path
-      // successor is exactly an edge target sitting one level deeper
-      val sums = cur.join(e, Seq("v"))
-        .join(succ, Seq("s", "w"))
-        .groupBy(col("s"), col("v"))
-        .agg(sum(col("sigma_v").cast("double") / col("sigma_w").cast("double")
-          * (lit(1.0) + col("delta_w"))).as("delta"))
-      val deltaLvl = cur
-        .join(sums, Seq("s", "v"), "left")
-        .select(col("s"), col("v").as("node"), col("sigma_v").as("sigma"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
-        .localCheckpoint(true)
-      contribs += deltaLvl.select(col("node"), col("delta"))
-      deltaAbove = deltaLvl
-    }
+    val reached =
+      if (maxLevel == 0)  // edgeless graph: every pivot is isolated
+        levels(0).select(col("node"), lit(0.0).as("betweenness")).distinct()
+      else {
+        // backward: δ at the deepest level is 0; walk levels upward. Each
+        // level pays one (v)-edge join + one (s,w) successor join over
+        // only that level's rows; shallower δs depend only on the level
+        // directly below, so one checkpointed frame rides the loop.
+        var deltaAbove = levels(maxLevel).withColumn("delta", lit(0.0))
+          .localCheckpoint(true)
+        val contribs = collection.mutable.ArrayBuffer(deltaAbove.select(col("node"), col("delta")))
+        for (lvl <- (maxLevel - 1) to 1 by -1) {
+          val cur = levels(lvl)
+            .select(col("s"), col("node").as("v"), col("sigma").as("sigma_v"))
+          val succ = deltaAbove.select(col("s"), col("node").as("w"),
+            col("sigma").as("sigma_w"), col("delta").as("delta_w"))
+          val e = edges.select(col("src").as("v"), col("dst").as("w"))
+          // δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w)·(1+δ(w)); a shortest-path
+          // successor is exactly an edge target sitting one level deeper
+          val sums = cur.join(e, Seq("v"))
+            .join(succ, Seq("s", "w"))
+            .groupBy(col("s"), col("v"))
+            .agg(sum(col("sigma_v").cast("double") / col("sigma_w").cast("double")
+              * (lit(1.0) + col("delta_w"))).as("delta"))
+          val deltaLvl = cur
+            .join(sums, Seq("s", "v"), "left")
+            .select(col("s"), col("v").as("node"), col("sigma_v").as("sigma"),
+              coalesce(col("delta"), lit(0.0)).as("delta"))
+            .localCheckpoint(true)
+          contribs += deltaLvl.select(col("node"), col("delta"))
+          deltaAbove = deltaLvl
+        }
+        // the levels are spent: the result reads only the δ frames
+        levels.foreach(Bridge.freeCheckpoint)
+        contribs.reduce(_ unionAll _)
+          .groupBy(col("node")).agg(sum(col("delta")).as("betweenness"))
+      }
     // COMPLETE datasheet: nodes unreachable from every pivot (and
     // isolated nodes) report 0.0 rather than going missing — callers
     // on non-connected graphs would otherwise read absence as "not
@@ -130,21 +113,15 @@ object GraphOps {
     val allNodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node")))
       .unionAll(pivots.toDF("node")).distinct()
-    val reached =
-      if (contribs.isEmpty)  // edgeless graph: every pivot is isolated
-        levels(0).select(col("node"), lit(0.0).as("betweenness")).distinct()
-      else contribs.reduce(_ unionAll _)
-        .groupBy(col("node")).agg(sum(col("delta")).as("betweenness"))
     allNodes.join(reached, Seq("node"), "left")
       .select(col("node"), coalesce(col("betweenness"), lit(0.0)).as("betweenness"))
   }
 
   /** Multi-hop BFS: nodes reachable from `sources` in <= maxHops
-    * directed hops, with minimal hop count. Semi-naive iteration —
-    * each round joins only the frontier against the edge set, so the
-    * work per round is O(frontier ⋈ edges), not O(visited ⋈ edges).
-    * localCheckpoint keeps the lineage flat (mandatory for iterative
-    * DataFrame algorithms at scale).
+    * directed hops, with minimal hop count. A [[Fixpoint.semiNaive]]
+    * loop: each round joins only the frontier against the edge set, so
+    * the work per round is O(frontier ⋈ edges), not O(visited ⋈ edges),
+    * and the visited set is the union tree of the frontiers.
     */
   def bfs(edgeDf: DataFrame, sources: Seq[Long], maxHops: Int,
           materializeEdges: Boolean = true)
@@ -155,31 +132,18 @@ object GraphOps {
     // cheap pruned scan (e.g. label directories of the bucketed fact
     // log): re-reading per hop then beats paying one full
     // materialization up front.
-    // One materializing job per hop: only the FRONTIER is checkpointed
-    // (needed for the emptiness count anyway); the visited set stays a
-    // union tree of checkpointed frontiers, never re-materialized
-    // (same restructure as the datalog rule fixpoint).
     val edges = if (materializeEdges) edgeDf.localCheckpoint(true) else edgeDf
-    // checkpoint+count fused into ONE job per round (r16,
-    // Bridge.localCheckpointCount): the separate count() action doubled
-    // the per-round job count of a latency-bound loop
-    var (frontier, n) = Bridge.localCheckpointCount(
-      sources.toDF("node").withColumn("hops", lit(0)))
-    val parts = collection.mutable.ArrayBuffer(frontier)
-    var visited = frontier
-    var hop = 0
-    while (hop < maxHops && n > 0) {
-      hop += 1
-      val next = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"), lit(hop).as("hops"))
-        .distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(visited.select("node"), Seq("node"), "left_anti"))
-      frontier = ck
-      n = cnt
-      if (n > 0) { parts += frontier; visited = parts.reduce(_ unionAll _) }
+    val parts = Fixpoint.semiNaive("bfs", Fixpoint.materialize("bfs",
+        sources.toDF("node").withColumn("hops", lit(0))), maxHops, budget = true) {
+      (frontier, visited) =>
+        // every frontier row sits at the same hop count
+        frontier.join(edges, frontier("node") === edges("src"))
+          .select(col("dst").as("node"), (frontier("hops") + 1).as("hops"))
+          .distinct()
+          .join(visited.select("node"), Seq("node"), "left_anti")
     }
-    visited
+    if (materializeEdges) Bridge.freeCheckpoint(edges)
+    parts.reduce(_ unionAll _)
   }
 
   /** Time-respecting reachability (TeGraph-style): over temporal edges
@@ -203,31 +167,22 @@ object GraphOps {
     // query never read). Left lazy, each hop's frontier⋈edges is a
     // 3-way join Catalyst reorders frontier-first, so only
     // frontier-adjacent bands ever compute.
-    // One checkpoint per hop (the frontier); the best-arrival set is a
-    // union tree of frontiers resolved by a final groupBy-min, so the
-    // accumulated state is never re-materialized during iteration.
+    // The best-arrival set is the union tree of the frontiers
+    // (Fixpoint.semiNaive), resolved by a groupBy-min.
     val edges = if (materializeEdges) tEdges.localCheckpoint(true) else tEdges
-    // one fused checkpoint+count job per round (r16, cf. bfs)
-    var (frontier, n) = Bridge.localCheckpointCount(
-      sources.toDF("node").withColumn("arrival", lit(Long.MinValue)))
-    val parts = collection.mutable.ArrayBuffer(frontier)
-    var hop = 0
-    while (hop < maxHops && n > 0) {
-      hop += 1
-      val bestSoFar = parts.reduce(_ unionAll _)
-        .groupBy(col("node")).agg(min(col("arrival")).as("old"))
+    val parts = Fixpoint.semiNaive("temporalReach", Fixpoint.materialize("temporalReach",
+        sources.toDF("node").withColumn("arrival", lit(Long.MinValue))),
+        maxHops, budget = true) { (frontier, total) =>
+      val bestSoFar = total.groupBy(col("node")).agg(min(col("arrival")).as("old"))
       val expanded = frontier.join(edges, frontier("node") === edges("src") &&
           edges("t") > frontier("arrival"))
         .groupBy(col("dst").as("node")).agg(min(col("t")).as("arrival"))
       // keep only strict improvements
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        expanded.join(bestSoFar, Seq("node"), "left")
-          .filter(col("old").isNull || col("arrival") < col("old"))
-          .select("node", "arrival"))
-      frontier = ck
-      n = cnt
-      if (n > 0) parts += frontier
+      expanded.join(bestSoFar, Seq("node"), "left")
+        .filter(col("old").isNull || col("arrival") < col("old"))
+        .select("node", "arrival")
     }
+    if (materializeEdges) Bridge.freeCheckpoint(edges)
     parts.reduce(_ unionAll _)
       .groupBy(col("node")).agg(min(col("arrival")).as("arrival"))
   }
@@ -255,9 +210,9 @@ object GraphOps {
     * groupBy/join shuffles that stay inside Tungsten codegen and AQE
     * (skew-join splitting, runtime partition coalescing), where
     * GraphX's RDD Pregel leaves both behind and iterates O(diameter)
-    * times. Same one-materializing-job-per-round structure as [[bfs]]:
-    * only the current edge set is checkpointed; the convergence check
-    * is an anti-join count on the just-checkpointed rounds. */
+    * times. A [[Fixpoint.iterate]] loop over the edge set; the
+    * convergence check is an anti-join on the just-checkpointed
+    * rounds, run only when their sizes match. */
   def ccDataFrame(edgeDf: DataFrame, maxIter: Int = 50)
                  (implicit spark: SparkSession): DataFrame = {
     val input = edgeDf.select(col("src").cast("long").as("u"),
@@ -267,11 +222,11 @@ object GraphOps {
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct()
-    var (edges, prevCount) = Bridge.localCheckpointCount(canon(input))
-    var converged = prevCount == 0
-    var i = 0
-    while (!converged && i < maxIter) {
-      i += 1
+    // star-contraction is monotone: the canonical edge set is stable
+    // iff sizes match and nothing left the old set
+    val edges = Fixpoint.iterate("ccDataFrame", Fixpoint.materialize("ccDataFrame", canon(input)),
+        maxIter, done = (prev, next) => next.rows == prev.rows &&
+          prev.df.join(next.df, Seq("u", "v"), "left_anti").isEmpty) { edges =>
       // large-star: every neighbor v > u links to u's neighborhood min
       val nbrs = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
       val mins = nbrs.groupBy("u").agg(min(col("v")).as("mn"))
@@ -284,19 +239,8 @@ object GraphOps {
       val small = sCanon.join(smins, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .unionAll(smins.select(col("u"), col("m").as("v")))
-      val (next, nextCount) = Bridge.localCheckpointCount(canon(small))
-      // star-contraction is monotone: the canonical edge set is stable
-      // iff sizes match and nothing left the old set
-      converged = nextCount == prevCount &&
-        edges.join(next, Seq("u", "v"), "left_anti").isEmpty
-      // superseded round's edge checkpoint released (the convergence
-      // anti-join above was its last reader) — without this, O(log n)
-      // corpus-sized copies pin the block store per cc call
-      Bridge.freeCheckpoint(edges)
-      edges = next
-      prevCount = nextCount
-    }
-    require(converged, s"ccDataFrame did not converge in $maxIter rounds")
+      canon(small)
+    }.df
     // at convergence the edge set is a forest of stars (member -> root)
     val nodes = input.select(col("u").as("node"))
       .unionAll(input.select(col("v").as("node"))).distinct()
@@ -313,39 +257,31 @@ object GraphOps {
     *
     * Scale shape, per round: one degree reduce over the surviving
     * edges + two semi-joins — all key-partitioned shuffles AQE can
-    * coalesce; only the shrinking edge set is localCheckpointed
-    * (frontier discipline shared with [[bfs]]/[[ccDataFrame]]).
+    * coalesce; the shrinking edge set is a [[Fixpoint.iterate]] state.
     * Rounds = peeling depth of the graph, ≤ max coreness — not
     * O(diameter). Returns surviving (node, deg) — degrees within the
     * core. */
   def kCore(edgeDf: DataFrame, k: Int, maxIter: Int = 50)
            (implicit spark: SparkSession): DataFrame = {
     // canonical undirected, self-loops dropped, parallel edges merged
-    var (edges, prev) = Bridge.localCheckpointCount(
-      edgeDf.select(col("src").cast("long").as("u"),
-          col("dst").cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .distinct())
-    var done = prev == 0
-    var i = 0
-    while (!done && i < maxIter) {
-      i += 1
-      val deg = edges.select(col("u").as("node"))
+    val canon = edgeDf.select(col("src").cast("long").as("u"),
+        col("dst").cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
+      .distinct()
+    // peeling only removes edges: equal sizes mean nothing was peeled
+    val edges = Fixpoint.iterate("kCore", Fixpoint.materialize("kCore", canon), maxIter,
+        done = (prev, next) => next.rows == prev.rows) { edges =>
+      val keep = edges.select(col("u").as("node"))
         .unionAll(edges.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("node")
-      val (next, n) = Bridge.localCheckpointCount(edges
+        .filter(col("deg") >= k).select("node")
+      edges
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v"))
-      done = n == prev
-      Bridge.freeCheckpoint(edges) // superseded peel round
-      edges = next
-      prev = n
-    }
-    require(done, s"kCore did not converge in $maxIter rounds")
+        .select("u", "v")
+    }.df
     edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -353,31 +289,19 @@ object GraphOps {
   }
 
   /** Full transitive closure of a directed edge set (semi-naive:
-    * delta ⋈ edges per round, frontier-only checkpoints). The batch
+    * delta ⋈ edges per round, [[Fixpoint.semiNaive]]). The batch
     * baseline [[closureDelta]] maintains incrementally. */
   def transitiveClosure(edgeDf: DataFrame, maxIter: Int = 50)
                        (implicit spark: SparkSession): DataFrame = {
-    val edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    var delta = edges
-    var dn = 1L // edges is non-empty or the loop is a no-op either way
-    val parts = collection.mutable.ArrayBuffer(delta)
-    def total = parts.reduce(_ unionAll _)
-    val e2 = edges.select(col("src").as("mid"), col("dst").as("to"))
-    var i = 0
-    while (dn > 0 && i < maxIter) {
-      i += 1
-      val next = delta.join(e2, delta("dst") === e2("mid"))
+    val edges = Fixpoint.materialize("transitiveClosure",
+      edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
+        .filter(col("src") =!= col("dst")).distinct())
+    val e2 = edges.df.select(col("src").as("mid"), col("dst").as("to"))
+    Fixpoint.semiNaive("transitiveClosure", edges, maxIter) { (delta, total) =>
+      delta.join(e2, delta("dst") === e2("mid"))
         .select(delta("src"), e2("to").as("dst")).distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(total, Seq("src", "dst"), "left_anti"))
-      delta = ck
-      dn = cnt
-      if (dn > 0) parts += delta
-    }
-    require(i < maxIter || dn == 0,
-      s"transitiveClosure did not converge in $maxIter rounds")
-    total.distinct()
+        .join(total, Seq("src", "dst"), "left_anti")
+    }.reduce(_ unionAll _).distinct()
   }
 
   /** INCREMENTAL transitive-closure maintenance: given the closure C of
@@ -416,32 +340,21 @@ object GraphOps {
         c.as("c").join(d.as("d"), col("c.dst") === col("d.src"))
           .select(col("c.src").as("src"), col("d.dst").as("dst")))
       .distinct()
-    val n0 = fresh(leftExt).unionAll(
+    val n0 = Fixpoint.materialize("closureDelta", fresh(leftExt).unionAll(
         leftExt.as("l").join(c.as("c2"), col("l.dst") === col("c2.src"))
           .select(col("l.src").as("src"), col("c2.dst").as("dst")))
       .distinct()
-      .join(c, Seq("src", "dst"), "left_anti")
-      .localCheckpoint(true)
-    val parts = collection.mutable.ArrayBuffer(c.localCheckpoint(true))
-    def total = parts.map(fresh).reduce(_ unionAll _)
-    var delta = n0
-    var dn = if (n0.isEmpty) 0L else 1L
+      .join(c, Seq("src", "dst"), "left_anti"))
+    val base = c.localCheckpoint(true)
     // stitch step reuses the one-new-edge paths; renamed columns keep
     // the round-1 self-join (delta IS n0) unambiguous
-    val n0k = n0.select(col("src").as("b_src"), col("dst").as("b_dst"))
-    var i = 0
-    while (dn > 0 && i < maxIter) {
-      i += 1
-      parts += delta
-      val next = delta.join(n0k, col("dst") === col("b_src"))
+    val n0k = n0.df.select(col("src").as("b_src"), col("dst").as("b_dst"))
+    val parts = base +: Fixpoint.semiNaive("closureDelta", n0, maxIter) { (delta, total) =>
+      delta.join(n0k, col("dst") === col("b_src"))
         .select(col("src"), col("b_dst").as("dst")).distinct()
-      val (ck, cnt) = Bridge.localCheckpointCount(
-        next.join(total, Seq("src", "dst"), "left_anti"))
-      delta = ck
-      dn = cnt
+        .join(fresh(base).unionAll(fresh(total)), Seq("src", "dst"), "left_anti")
     }
-    require(dn == 0, s"closureDelta did not converge in $maxIter rounds")
-    total.distinct()
+    parts.map(fresh).reduce(_ unionAll _).distinct()
   }
 
   /** Strongly connected components of a DIRECTED edge set, fully
@@ -451,12 +364,15 @@ object GraphOps {
     * the component (deterministic canonical labels, partitioning-
     * independent).
     *
-    * Per outer round:
-    *  1. TRIM — nodes with no incoming or no outgoing edge in the
-    *     remaining subgraph are singleton SCCs; peeled iteratively
-    *     (two semi-joins per peel). On real graphs (web/ref graphs)
-    *     this removes the vast majority of nodes before any fixpoint
-    *     work — the standard FW-BW preprocessing.
+    * The working state is the edge set; a node that loses its last
+    * edge is a singleton SCC, labelled at the end by the node set. Per
+    * outer round:
+    *  1. TRIM — an edge whose source has no incoming or whose target
+    *     has no outgoing edge in the remaining subgraph cannot lie on a
+    *     cycle; peeled iteratively (two semi-joins per peel) until the
+    *     edge set is stable. On real graphs (web/ref graphs) this
+    *     removes the vast majority of nodes before any fixpoint work —
+    *     the standard FW-BW preprocessing.
     *  2. COLOR — forward min-label fixpoint: color(v) = min node id
     *     that reaches v. Semi-naive: only improved labels join edges
     *     next round (frontier discipline shared with [[bfs]]).
@@ -465,8 +381,9 @@ object GraphOps {
     *     color class. All roots collect simultaneously — one BFS over
     *     the color-restricted reversed edges, O(frontier ⋈ edges) per
     *     hop.
-    *  Collected SCCs leave the graph; uncollected nodes re-run with
-    *  their blocking components gone. Outer rounds = nesting depth of
+    *  Each sub-loop is a [[Fixpoint]] loop. Collected SCCs leave the
+    *  graph; uncollected nodes re-run with their blocking components
+    *  gone. Outer rounds = nesting depth of
     *  the SCC condensation reachable from per-round minima — small on
     *  real graphs; every per-round step is key-partitioned
     *  reduce/semi-join work AQE can coalesce, nothing is ever
@@ -475,50 +392,26 @@ object GraphOps {
           smallGraphEdges: Long = 1L << 16)
          (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    var edges = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    var nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct().localCheckpoint(true)
-    val assigned = collection.mutable.ArrayBuffer.empty[DataFrame]
+    var edges = Fixpoint.materialize("scc",
+      edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
+        .filter(col("src") =!= col("dst")).distinct())
+    val nodes = edges.df.select(col("src").as("node"))
+      .unionAll(edges.df.select(col("dst").as("node"))).distinct().localCheckpoint(true)
+    val labels = collection.mutable.ArrayBuffer.empty[DataFrame]
     var outer = 0
-    var remaining = nodes.count()
-    var dispatchedLocal = false
-    while (remaining > 0 && outer < maxOuter && !dispatchedLocal) {
+    var open = edges.rows > 0
+    while (open) {
+      if (outer == maxOuter) throw new Fixpoint.NotConverged("scc", maxOuter)
       outer += 1
-      // 1. trim: peel trivial SCCs until every node is on a cycle-able
-      // position (has both in- and out-edges in the remaining graph)
-      var trimming = true
-      var it = 0
-      while (trimming && it < maxIter) {
-        it += 1
-        val nontrivial = nodes
-          .join(edges.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-          .join(edges.select(col("dst").as("node")).distinct(), Seq("node"), "left_semi")
-          .localCheckpoint(true)
-        // fused checkpoint+count (r16): the separate isEmpty probe and
-        // the assigned-frame checkpoint were two more jobs per peel
-        val (trivial, tn) = Bridge.localCheckpointCount(
-          nodes.join(nontrivial, Seq("node"), "left_anti"))
-        if (tn == 0) {
-          // nothing peeled: both fresh checkpoints are superseded (the
-          // empty `trivial` is not assigned anywhere)
-          trimming = false
-          Bridge.freeCheckpoint(nontrivial); Bridge.freeCheckpoint(trivial)
-        }
-        else {
-          assigned += trivial.select(col("node"), col("node").as("scc"))
-          val (pn, pe) = (nodes, edges)
-          nodes = nontrivial
-          edges = edges
-            .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-            .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-            .localCheckpoint(true)
-          // superseded peel round (its successors above are materialized)
-          Bridge.freeCheckpoint(pn); Bridge.freeCheckpoint(pe)
-        }
+      // 1. trim: keep the edges whose source has an in-edge and whose
+      // target has an out-edge; peeling only removes edges, so equal
+      // sizes mean nothing was peeled
+      edges = Fixpoint.iterate("scc trim", edges, maxIter,
+          done = (prev, next) => next.rows == prev.rows) { e =>
+        e.join(e.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
+          .join(e.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
+          .select("src", "dst")
       }
-      require(it < maxIter, s"scc trim did not converge in $maxIter peels")
-      remaining = nodes.count()
       // Adaptive dispatch (the pageRankAuto discipline): trim is the
       // DISTRIBUTED bulk-reduction — on real ref/web graphs it removes
       // the overwhelmingly-trivial majority at any scale. What remains
@@ -529,88 +422,58 @@ object GraphOps {
       // exact, deterministic, and bounded by `smallGraphEdges`.
       // Larger cores run the distributed coloring path (the 100× path;
       // parity between the two is spec-pinned).
-      if (remaining > 0 && isSmallGraph(edges, smallGraphEdges)) {
-        val local = sccLocal(edges.as[(Long, Long)].collect().toSeq)
-        assigned += local.toDF("node", "scc")
-        remaining = 0
-        dispatchedLocal = true
-      } else if (remaining > 0) {
-        // 2. color: forward min-label fixpoint, improvements-only frontier
-        var colors = nodes.select(col("node"), col("node").as("color")).localCheckpoint(true)
-        var frontier = colors
-        it = 0
-        var fn = 1L // root colors are non-empty when remaining > 0
-        while (fn > 0 && it < maxIter) {
-          it += 1
-          val cand = frontier.join(edges, frontier("node") === edges("src"))
+      if (edges.rows == 0) open = false
+      else if (edges.rows <= smallGraphEdges) {
+        labels += sccLocal(edges.df.as[(Long, Long)].collect().toSeq).toDF("node", "scc")
+        open = false
+      } else {
+        val core = edges.df
+        // 2. color: forward min-label fixpoint over improvements-only
+        // frontiers; a node's color is its least label in the total
+        val colorParts = Fixpoint.semiNaive("scc color", Fixpoint.materialize("scc color",
+            core.select(col("src").as("node"), col("src").as("color")).distinct()),
+            maxIter) { (frontier, total) =>
+          frontier.join(core, frontier("node") === core("src"))
             .groupBy(col("dst").as("node")).agg(min(col("color")).as("cand"))
-          val (improved, imn) = Bridge.localCheckpointCount(
-            cand.join(colors, Seq("node"))
-              .filter(col("cand") < col("color"))
-              .select(col("node"), col("cand").as("color")))
-          fn = imn
-          if (fn > 0) {
-            val prev = colors
-            colors = colors.join(improved.withColumnRenamed("color", "c2"), Seq("node"), "left")
-              .select(col("node"), coalesce(col("c2"), col("color")).as("color"))
-              .localCheckpoint(true)
-            Bridge.freeCheckpoint(prev) // superseded color map
-          }
-          // superseded frontier (round 1's is the initial color map)
-          if (it > 1) Bridge.freeCheckpoint(frontier)
-          frontier = improved
+            .join(total.groupBy("node").agg(min(col("color")).as("color")), Seq("node"))
+            .filter(col("cand") < col("color"))
+            .select(col("node"), col("cand").as("color"))
         }
-        require(it < maxIter, s"scc coloring did not converge in $maxIter rounds")
-        Bridge.freeCheckpoint(frontier) // the last, empty improvement set
+        val colors = colorParts.reduce(_ unionAll _)
+          .groupBy("node").agg(min(col("color")).as("color")).localCheckpoint(true)
+        colorParts.foreach(Bridge.freeCheckpoint)
         // 3. collect: backward BFS from the color roots inside each color
         // class; the reached set IS the root's SCC
-        val cEdges = edges
+        val cEdges = core
           .join(colors.select(col("node").as("src"), col("color").as("sc")), Seq("src"))
           .join(colors.select(col("node").as("dst"), col("color").as("dc")), Seq("dst"))
           .filter(col("sc") === col("dc"))
           .select(col("src"), col("dst"), col("sc").as("color")).localCheckpoint(true)
-        var reach = colors.filter(col("node") === col("color")).localCheckpoint(true)
+        val roots = Fixpoint.materialize("scc collect",
+          colors.filter(col("node") === col("color")))
         Bridge.freeCheckpoint(colors) // cEdges + root set are materialized
-        var bfsFrontier = reach
-        var bn = 1L // the root set is non-empty when remaining > 0
-        it = 0
-        while (bn > 0 && it < maxIter) {
-          it += 1
-          val pred = bfsFrontier.join(cEdges,
-              bfsFrontier("node") === cEdges("dst") && bfsFrontier("color") === cEdges("color"))
-            .select(cEdges("src").as("node"), bfsFrontier("color").as("color")).distinct()
-          val (bf, bfc) = Bridge.localCheckpointCount(
-            pred.join(reach, Seq("node"), "left_anti"))
-          // superseded frontier (round 1's is the root set, `reach`)
-          if (it > 1) Bridge.freeCheckpoint(bfsFrontier)
-          bfsFrontier = bf
-          bn = bfc
-          if (bn > 0) {
-            val prev = reach
-            reach = reach.unionAll(bfsFrontier).localCheckpoint(true)
-            Bridge.freeCheckpoint(prev) // superseded reached set
-          }
-        }
-        require(it < maxIter, s"scc collection did not converge in $maxIter hops")
-        // collect BFS done with its edges and its last, empty frontier
-        Bridge.freeCheckpoint(cEdges); Bridge.freeCheckpoint(bfsFrontier)
-        assigned += reach.select(col("node"), col("color").as("scc"))
-        val (pn, pe) = (nodes, edges)
-        nodes = nodes.join(reach, Seq("node"), "left_anti").localCheckpoint(true)
-        edges = edges
-          .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
-        Bridge.freeCheckpoint(pn); Bridge.freeCheckpoint(pe)
-        remaining = nodes.count()
+        val reach = Fixpoint.semiNaive("scc collect", roots, maxIter) { (frontier, reached) =>
+          frontier.join(cEdges,
+              frontier("node") === cEdges("dst") && frontier("color") === cEdges("color"))
+            .select(cEdges("src").as("node"), frontier("color").as("color")).distinct()
+            .join(reached, Seq("node"), "left_anti")
+        }.reduce(_ unionAll _)
+        Bridge.freeCheckpoint(cEdges)
+        labels += reach.select(col("node"), col("color").as("scc"))
+        val gone = reach.select("node")
+        edges = Fixpoint.replace("scc", outer, edges)(core
+          .join(gone.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
+          .join(gone.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
+          .select("src", "dst"))
+        open = edges.rows > 0
       }
     }
-    require(remaining == 0, s"scc did not converge in $maxOuter outer rounds")
-    // the result holds only the assigned frames (or, when nothing was
-    // assigned, the empty node set): the working graph is released
-    Bridge.freeCheckpoint(edges)
-    if (assigned.isEmpty) nodes.select(col("node"), col("node").as("scc"))
-    else { Bridge.freeCheckpoint(nodes); assigned.reduce(_ unionAll _) }
+    // the result holds the node set and the labels: the working graph
+    // is released
+    Bridge.freeCheckpoint(edges.df)
+    if (labels.isEmpty) nodes.select(col("node"), col("node").as("scc"))
+    else nodes.join(labels.reduce(_ unionAll _), Seq("node"), "left")
+      .select(col("node"), coalesce(col("scc"), col("node")).as("scc"))
   }
 
   /** Iterative (explicit-stack) Tarjan over a driver-local edge list —
@@ -838,10 +701,10 @@ object GraphOps {
   def labelPropagation(edgeDf: DataFrame, rounds: Int = 5)
                       (implicit spark: SparkSession): DataFrame = {
     val edges = edgeDf.select(col("src"), col("dst")).localCheckpoint(true)
-    var labels = edges.select(col("src").as("node"))
+    val init = Fixpoint.materialize("labelPropagation", edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node")))
-      .distinct().withColumn("lbl", col("node")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+      .distinct().withColumn("lbl", col("node")))
+    val labels = Fixpoint.iterate("labelPropagation", init, rounds, budget = true) { labels =>
       val nbrCnt = edges.join(labels, edges("src") === labels("node"))
         .select(col("dst").as("n"), col("lbl"))
         .unionAll(labels.select(col("node").as("n"), col("lbl")))
@@ -849,11 +712,11 @@ object GraphOps {
         .agg(count(lit(1)).as("cnt"))
       val winner = nbrCnt.groupBy(col("n"))
         .agg(expr("max_by(lbl, named_struct('c', cnt, 'l', -lbl))").as("new_lbl"))
-      labels = labels.join(winner, labels("node") === winner("n"), "left")
+      labels.join(winner, labels("node") === winner("n"), "left")
         .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
     }
-    labels.select(col("node"), col("lbl").as("community"))
+    Bridge.freeCheckpoint(edges)
+    labels.df.select(col("node"), col("lbl").as("community"))
   }
 
   /** LINK PREDICTION by common-neighbor JACCARD over a bipartite

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -524,23 +525,16 @@ object Dedup {
     * bucket's representative A) resolves once A is itself dropped as a
     * member elsewhere and a later round re-buckets the survivors with B
     * as the new representative. Each non-final round drops at least one
-    * document, so the iteration terminates; round cost is one generator
-    * pass over the (shrinking) survivor set, and each round's pair set
-    * is checkpointed once — the emptiness probe and the anti-join share
-    * it. */
+    * document, so the iteration terminates, and a round that drops none
+    * is the fixpoint. Round cost is one generator pass over the
+    * (shrinking) survivor set; the survivors are a [[Fixpoint.iterate]]
+    * state. */
   def dedupStrict(docs: DataFrame, generator: DataFrame => DataFrame,
-                  maxRounds: Int = 20): DataFrame = {
-    var survivors = docs.localCheckpoint(true)
-    var round = 0
-    while (round < maxRounds) {
-      round += 1
-      val pairs = generator(survivors).localCheckpoint(true)
-      if (pairs.isEmpty) return survivors
-      survivors = keepSurvivors(survivors, pairs).localCheckpoint(true)
-    }
-    throw new IllegalStateException(
-      s"dedupStrict did not reach a fixpoint in $maxRounds rounds")
-  }
+                  maxRounds: Int = 20): DataFrame =
+    Fixpoint.iterate("dedupStrict", Fixpoint.materialize("dedupStrict", docs), maxRounds,
+        done = (prev, next) => next.rows == prev.rows) { survivors =>
+      keepSurvivors(survivors, generator(survivors))
+    }.df
 
   /** 64-bit SimHash per doc: per-bit +1/-1 votes from each token's
     * md5-derived hash, sign of the vote sum becomes the bit — computed

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
 object Bridge {
@@ -56,26 +56,29 @@ object Bridge {
     (ids.size, bytes)
   }
 
-  /** Eager localCheckpoint that RETURNS the materialized row count.
-    * `Dataset.localCheckpoint(true)` already runs one materializing job
-    * (an internal count) and discards the result, so an iterative loop
-    * that needs a per-round emptiness/progress test pays a SECOND job
-    * for it (`count()`/`isEmpty`) — at local job-latency scale that is
-    * the dominant cost of the latency-bound graph loops (r16). This
-    * mirrors the Dataset.checkpoint internals: copy rows (the scan
-    * reuses UnsafeRow buffers), localCheckpoint the RDD, count to
-    * materialize, rebuild a DataFrame over the checkpointed RDD.
-    * Identical storage/release semantics to Dataset.localCheckpoint:
-    * the RDD registers in getPersistentRDDs (harness sweeps see it)
-    * and [[freeCheckpoint]] releases it. */
-  def localCheckpointCount(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val internal = df.queryExecution.toRdd.map(_.copy())
-    internal.localCheckpoint()
-    val n = internal.count()
-    (spark.internalCreateDataFrame(internal, df.schema, isStreaming = false), n)
+  /** `Dataset.localCheckpoint(eager = true)` that also RETURNS the
+    * row count, from the same single job. The eager checkpoint already
+    * runs one materializing job and discards what it saw, so a loop
+    * that needs a per-round emptiness or progress test would pay a
+    * second job for it. Built the way `Dataset.checkpoint` builds its
+    * result: the job runs as one SQL execution over the frame's
+    * executed plan (rows copied, since the scan reuses UnsafeRow
+    * buffers), and the frame is a `LogicalRDD.fromDataset` leaf, which
+    * keeps the source's attributes, `outputPartitioning`,
+    * `outputOrdering` and statistics. The one difference is the job: a
+    * `count` that keeps its result, where the checkpoint runs its own
+    * pass. The RDD registers in getPersistentRDDs (harness sweeps see
+    * it) and [[freeCheckpoint]] releases it. */
+  def localCheckpointCount(df: DataFrame): (DataFrame, Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      qe.executedPlan.resetMetrics()
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      val n = rdd.count()
+      (classic.Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)), n)
+    }
   }
 
   /** External row → compact catalyst row, converted once so every plan
@@ -108,14 +111,10 @@ object Bridge {
   }
 
   /** Release the materialized RDD blocks behind a (local)checkpointed
-    * frame — the storage half of `checkpointRddIds`. Iterative
-    * algorithms that maintain ONE frame across rounds (settled sets,
-    * color maps) supersede a checkpoint per round; without an explicit
-    * release each superseded copy stays pinned in the block store for
-    * the session's lifetime — O(rounds × frame) storage, the quantity
-    * that matters on a 200-level-diameter graph. Only call once the
-    * SUCCESSOR checkpoint has materialized (eager localCheckpoint)
-    * and no other plan references the frame. Non-blocking. */
+    * frame — the storage half of `checkpointRddIds`: every LogicalRDD
+    * leaf of its plan. Only call once no other live plan reads the
+    * frame (graft.core.Fixpoint releases the state each round
+    * supersedes this way). Non-blocking. */
   def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD =>

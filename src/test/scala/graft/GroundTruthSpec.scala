@@ -22,6 +22,23 @@ class GroundTruthSpec extends SparkSpec {
     (cluster ++ fillers).toDF("doc_id", "text")
   }
 
+  /** Runs an iterative operator and reads its result, then pins that
+    * it leaks no checkpoint: once the caller releases the checkpoints
+    * the result is built on, the session holds no more persistent RDDs
+    * than before the call. */
+  private def leakFree[T](what: String)(call: => org.apache.spark.sql.DataFrame)
+                         (read: org.apache.spark.sql.DataFrame => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = call
+    val got = read(out)
+    org.apache.spark.sql.graft.Bridge.freeCheckpoint(out)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"$what leaked checkpoints $leaked")
+    got
+  }
+  private def longPairs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("minhashLsh: 1000-doc identical cluster collapses to 999 star pairs, no quadratic blowup") {
     val pairs = Dedup.minhashLsh(clusterDocs, k = 64, bands = 16, estThreshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -603,14 +620,13 @@ class GroundTruthSpec extends SparkSpec {
     val edges = (clique ++ chain).toDF("src", "dst")
     // k=2: 12 peels (deg 1), then 11, then 10 — a 3-round cascade;
     // the clique keeps internal degree 5
-    val core2 = GraphOps.kCore(edges, k = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def core(k: Int) = leakFree(s"kCore(k=$k)")(GraphOps.kCore(edges, k))(longPairs)
+    val core2 = core(2)
     assert(core2 === (0 until 6).map(_.toLong -> 5L).toMap)
     // k=6 exceeds max coreness: empty core
-    assert(GraphOps.kCore(edges, k = 6).isEmpty)
+    assert(core(6).isEmpty)
     // k=1 peels nothing: every node at its full degree
-    val core1 = GraphOps.kCore(edges, k = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val core1 = core(1)
     assert(core1(5L) === 6L && core1(12L) === 1L && core1.size === 9)
   }
 
@@ -665,6 +681,8 @@ class GroundTruthSpec extends SparkSpec {
     val e3 = Seq((11L, 1L), (20L, 21L)).toDF("src", "dst") // cycle + island
     val c1 = GraphOps.transitiveClosure(e1)(spark)
     assert(pairs(c1) === Set((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L)))
+    assert(leakFree("transitiveClosure")(GraphOps.transitiveClosure(e1)(spark))(pairs) ===
+      pairs(c1))
     val c2 = GraphOps.closureDelta(c1, e2)(spark)
     assert(pairs(c2) === pairs(GraphOps.transitiveClosure(e1.unionAll(e2))(spark)))
     val c3 = GraphOps.closureDelta(c2, e3)(spark)
@@ -688,19 +706,11 @@ class GroundTruthSpec extends SparkSpec {
     ).toDF("src", "dst")
     // BOTH serving paths must agree with the ground truth: the
     // post-trim driver Tarjan (default dispatch) and the distributed
-    // coloring fixpoint (smallGraphEdges = 0 forces the 100× path)
-    // Each call also pins that scc leaks no checkpoint: once the caller
-    // releases the checkpoints its result is built on, the session holds
-    // no more persistent RDDs than before the call.
-    def run(df: org.apache.spark.sql.DataFrame, small: Long) = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val out = GraphOps.scc(df, smallGraphEdges = small)(spark)
-      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      org.apache.spark.sql.graft.Bridge.freeCheckpoint(out)
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"scc (smallGraphEdges=$small) leaked checkpoints $leaked")
-      got
-    }
+    // coloring fixpoint (smallGraphEdges = 0 forces the 100× path).
+    // Each call also pins that scc leaks no checkpoint.
+    def run(df: org.apache.spark.sql.DataFrame, small: Long) =
+      leakFree(s"scc (smallGraphEdges=$small)")(
+        GraphOps.scc(df, smallGraphEdges = small)(spark))(longPairs)
     for (small <- Seq(1L << 16, 0L)) {
       assert(run(edges, small) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
         4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))
@@ -714,13 +724,22 @@ class GroundTruthSpec extends SparkSpec {
     }
   }
 
+  test("bfs: minimal hop counts over a diamond with a back edge") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 1L), (4L, 5L))
+      .toDF("src", "dst")
+    for (mat <- Seq(true, false))
+      assert(leakFree(s"bfs(materializeEdges=$mat)")(
+          GraphOps.bfs(edges, Seq(1L), maxHops = 5, materializeEdges = mat))(
+          _.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap) ===
+        Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2, 5L -> 3))
+  }
+
   test("ccDataFrame matches GraphX on the graph_cc fixture") {
     val e = GraphOps.edges(graft.core.TestData.staticDb(spark, "/root/testdata/sf0.001"))
       .filter(org.apache.spark.sql.functions.col("label") === "n_regionkey_ref")
     val viaGraphX = GraphOps.connectedComponents(e).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDf = GraphOps.ccDataFrame(e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaDf = leakFree("ccDataFrame")(GraphOps.ccDataFrame(e))(longPairs)
     assert(viaDf === viaGraphX)
   }
 
@@ -950,6 +969,17 @@ class GroundTruthSpec extends SparkSpec {
     val strict = Dedup.dedupStrict(sigs, gen)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(strict === Set(1L, 3L))
+    // leak pin, over a generator that materialises nothing itself
+    // (simhashPairsFromSigs checkpoints its own signature groups): the
+    // least survivor pairs only with the next one, so each round drops
+    // one doc and four docs take four rounds
+    val docs = (1L to 4L).toDF("doc_id")
+    val nearest = (df: org.apache.spark.sql.DataFrame) => {
+      val least = df.agg(min(col("doc_id")).as("a"))
+      least.join(df, col("doc_id") > col("a")).groupBy("a").agg(min(col("doc_id")).as("b"))
+    }
+    assert(leakFree("dedupStrict")(Dedup.dedupStrict(docs, nearest))(
+      _.collect().map(_.getLong(0)).toSet) === Set(1L))
   }
 
   test("duplicatedSpans: hand-computed cross-doc span coverage, multiplicity counted") {
@@ -1165,8 +1195,7 @@ class GroundTruthSpec extends SparkSpec {
       for (a <- ns; b <- ns if a != b) yield (a, b)
     val edges = (cliqueEdges(cliqueA) ++ cliqueEdges(cliqueB) ++
       Seq((3L, 10L), (10L, 3L))).toDF("src", "dst")
-    val out = GraphOps.labelPropagation(edges, rounds = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val out = leakFree("labelPropagation")(GraphOps.labelPropagation(edges, rounds = 4))(longPairs)
     assert(cliqueA.forall(out(_) === 1L), s"clique A: $out")
     assert(cliqueB.forall(out(_) === 10L), s"clique B: $out")
   }
@@ -1701,8 +1730,8 @@ class GroundTruthSpec extends SparkSpec {
   test("betweenness: diamond graph splits credit across the two shortest paths") {
     // 1→2→4, 1→3→4: σ(1→4) = 2, so 2 and 3 each carry δ = 1/2
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
-    val bc = GraphOps.betweenness(edges, Seq(1L, 2L, 3L, 4L)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val bc = leakFree("betweenness")(GraphOps.betweenness(edges, Seq(1L, 2L, 3L, 4L)))(
+      _.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     assert(bc(2L) === 0.5 && bc(3L) === 0.5)
     assert(bc.getOrElse(4L, 0.0) === 0.0) // endpoint only, never interior
     assert(bc.getOrElse(1L, 0.0) === 0.0)
