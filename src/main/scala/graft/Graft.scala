@@ -40,14 +40,9 @@ final class Graft private (val session: Transactor.Session,
   /** The database as of a wall-clock instant: resolves the newest
     * transaction whose `unifydb/txInstant` is <= `instant` (every tx
     * writes one — reference `make-new-tx-facts`, transact.clj:17) and
-    * time-travels there. */
-  def asOfInstant(instant: Long): Graft = {
-    import org.apache.spark.sql.functions._
-    val tx = session.db.log
-      .filter(col("a") === "unifydb/txInstant" && col("vlong") <= instant)
-      .agg(max(col("tx"))).head()
-    asOf(if (tx.isNullAt(0)) -1L else tx.getLong(0))
-  }
+    * time-travels there. The session records each instant at commit
+    * (and a `Graft.over` base log's at open), so this runs no job. */
+  def asOfInstant(instant: Long): Graft = asOf(session.txAsOfInstant(instant))
 
   /** Historical mode: every fact version, with tx/added visible in
     * patterns. */
@@ -86,7 +81,10 @@ object Graft {
 
   /** Over an existing fact db (e.g. bulk-melted tables or
     * sources.FactLogIO.read). `firstTx`/`firstEntityId` must be above
-    * anything in the log. The log's schema facts are read once, here. */
+    * anything in the log. The log's schema facts and tx instants are read
+    * once, here, in one job. A transaction that writes one of the log's
+    * entities makes reads as of it or later resolve the whole log with
+    * `FactDb.snapshot`'s windows (see `Transactor`). */
   def over(spark: SparkSession, db: FactDb, firstTx: Long,
            firstEntityId: Long): Graft =
     new Graft(Transactor.session(spark, db, firstTx, firstEntityId))

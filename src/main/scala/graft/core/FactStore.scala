@@ -316,10 +316,14 @@ object FactStore {
   * @param attrTypes  attribute -> value slot ("vstr"|"vlong"|"vdbl"|"vts"|"vref")
   * @param cardMany   attributes with :cardinality/many semantics
   *                   (reference schema facts, /root/reference/src/unifydb/schema.clj)
+  * @param delta      set by a transactor session on the database values
+  *                   it publishes: its delta, resolvable on the driver
+  *                   (see [[snapshot]])
   */
 case class FactDb(log: DataFrame, attrTypes: Map[String, String],
                   cardMany: Set[String] = Set.empty,
-                  versioned: Boolean = true) {
+                  versioned: Boolean = true,
+                  delta: Option[DriverDelta] = None) {
 
   def union(other: FactDb): FactDb =
     FactDb(log.unionAll(other.log), attrTypes ++ other.attrTypes,
@@ -330,28 +334,42 @@ case class FactDb(log: DataFrame, attrTypes: Map[String, String],
   def historical(asOfTx: Long = Long.MaxValue): DataFrame =
     if (asOfTx == Long.MaxValue) log else log.filter(col("tx") <= asOfTx)
 
-  /** Resolved live facts as of `asOfTx`. One shuffle on (e,a): both the
-    * per-value liveness window and the cardinality-one pick share the
-    * same (e,a)-hash partitioning, so Spark plans a single exchange. */
+  /** Resolved live facts as of `asOfTx`.
+    *
+    * An unversioned db is its bounded log. Otherwise two windows
+    * resolve the log, each keyed by (e,a) so that Spark plans a single
+    * exchange: the per-value liveness window and the cardinality-one
+    * pick. A database value published by a transactor session skips
+    * both for its delta: the session resolved the delta on the driver
+    * under the same rules (`DriverDelta`, `Versions.live`), so the
+    * snapshot is the windowed base unioned with one leaf of live delta
+    * facts, both under this db's cardinality-many set. The windows
+    * still cover the whole log when `delta` is None (a db not built by
+    * a session, a `union`, a `copy` onto another log) and for reads as
+    * of or after the first tx whose delta wrote a base entity. */
   def snapshot(asOfTx: Long = Long.MaxValue): DataFrame = {
-    val bounded = historical(asOfTx)
     // Single-tx append-only ingests (the bulk-loaded base tables) need no
     // version resolution — skip both windows so pattern scans stay a pure
     // scan+filter (this is the 100 TB fast path: immutable fact
     // partitions resolve to themselves).
-    if (!versioned) return bounded
-    val perValue = Window.partitionBy(col("e"), col("a"), col("vtype"),
-        col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"))
-      .orderBy(col("tx").desc, col("added").asc) // retraction wins same-tx tie
-    val live = bounded
-      .withColumn("__rn", row_number().over(perValue))
-      .filter(col("__rn") === 1 && col("added"))
-      .drop("__rn")
-    val manyAttrs = cardMany
-    if (manyAttrs.isEmpty) resolveCardOne(live, col("a").isNotNull)
-    else {
-      val isOne = !col("a").isin(manyAttrs.toSeq: _*)
-      resolveCardOne(live, isOne)
+    if (!versioned) return historical(asOfTx)
+    delta.filter(_.log eq log).flatMap(d => d.resolved(asOfTx, cardMany).map(d.base -> _)) match {
+      case Some((base, resolvedDelta)) =>
+        copy(log = base, delta = None).snapshot(asOfTx).unionAll(resolvedDelta)
+      case None =>
+        val perValue = Window.partitionBy(col("e"), col("a"), col("vtype"),
+            col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"))
+          .orderBy(col("tx").desc, col("added").asc) // retraction wins same-tx tie
+        val live = historical(asOfTx)
+          .withColumn("__rn", row_number().over(perValue))
+          .filter(col("__rn") === 1 && col("added"))
+          .drop("__rn")
+        val manyAttrs = cardMany
+        if (manyAttrs.isEmpty) resolveCardOne(live, col("a").isNotNull)
+        else {
+          val isOne = !col("a").isin(manyAttrs.toSeq: _*)
+          resolveCardOne(live, isOne)
+        }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,9 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * construction, like the reference's own schema sub-query).
   *
   * [[Schema.History]] is the same derivation over a session's schema
-  * ops held in memory: a transactor records each schema op at commit,
-  * so resolving the set for a tx runs no Spark job. `cardManyAttrs`
-  * stays the log-derived reference it must agree with.
+  * ops held on the driver: a transactor records each schema op at
+  * commit and resolves them with [[Versions.live]], the resolver its
+  * delta index also uses, so resolving the set for a tx runs no Spark
+  * job. `cardManyAttrs` stays the log-derived reference it must agree
+  * with (SchemaHistorySpec).
   */
 object Schema {
   val SchemaAttr = "unifydb/schema"
@@ -44,79 +46,36 @@ object Schema {
   val Attrs: Seq[String] = Seq(SchemaAttr, CardinalityAttr)
 
   /** Every `unifydb/schema` and `unifydb/cardinality` op (assertions and
-    * retractions, each with its tx) as rows of `FactStore.factSchema`,
-    * resolved in memory by [[History.cardMany]] exactly as
-    * [[cardManyAttrs]] resolves them through `FactDb.snapshot`: per
-    * (e, a, value) the newest op as of the tx decides liveness (a
-    * retraction wins a same-tx tie), then a cardinality-one attribute
-    * keeps its newest live value per (e, a), value slots descending
-    * (nulls last) breaking a same-tx tie. Ops are metadata-sized. */
-  final case class History(ops: Vector[Row]) {
-    def ++(more: Iterable[Row]): History = History(ops ++ more)
+    * retractions, each with its tx), held on the driver: a session
+    * records its own ops at commit and reads a base log's once, at open.
+    * [[History.cardMany]] resolves them through the one in-memory
+    * resolver, [[Versions.live]], under the rules [[cardManyAttrs]]
+    * reads through `FactDb.snapshot`, so the set as of any tx costs no
+    * Spark job. Ops are metadata-sized. */
+  final case class History(ops: Versions) {
+    def ++(more: Iterable[InternalRow]): History = History(ops ++ more)
 
     /** Attributes declared cardinality-many as of `asOfTx`, over a db
       * whose own cardinality-many set is `declared` and whose
       * versioning flag is `versioned` (as `cardManyAttrs` reads them
       * from its `FactDb`). */
     def cardMany(asOfTx: Long, declared: Set[String], versioned: Boolean): Set[String] = {
-      val visible = ops.filter(_.getLong(TxCol) <= asOfTx)
-      val live =
-        if (!versioned) visible
-        else {
-          val perValue = visible.groupBy(r => (0 until TxCol).map(r.get)).values.flatMap { vs =>
-            val newest = vs.map(_.getLong(TxCol)).max
-            val atNewest = vs.filter(_.getLong(TxCol) == newest)
-            if (atNewest.forall(_.getBoolean(AddedCol))) atNewest.headOption else None
-          }
-          perValue.groupBy(r => (r.getLong(0), r.getString(1))).values.flatMap { rs =>
-            if (declared(rs.head.getString(1))) rs else Seq(rs.max(Newest))
-          }
-        }
+      val live = (if (versioned) ops.live(asOfTx, declared) else ops.visible(asOfTx)).toSeq
       val many = live.collect {
-        case r if r.getString(1) == CardinalityAttr && r.get(VstrCol) == CardinalityMany => r.getLong(0)
+        case r if Versions.attr(r) == CardinalityAttr && ManyValue == Versions.vstr(r) => r.getLong(0)
       }.toSet
       live.collect {
-        case r if r.getString(1) == SchemaAttr && many(r.getLong(0)) => r.getString(VstrCol)
+        case r if Versions.attr(r) == SchemaAttr && many(r.getLong(0)) =>
+          Option(Versions.vstr(r)).map(_.toString).orNull
       }.toSet
     }
   }
 
   object History {
-    val empty: History = History(Vector.empty)
-
-    /** The schema ops of a fact log (one Spark job). */
-    def of(log: DataFrame): History =
-      History(log.filter(col("a").isin(Attrs: _*)).collect().toVector)
+    val empty: History = History(Versions.empty)
   }
 
-  private val VstrCol = 3
-  private val TxCol = 8
-  private val AddedCol = 9
-
-  /** `resolveCardOne`'s window order as "greater = newer": tx, then each
-    * value slot with a present value above an absent one. Strings
-    * compare as Spark does (UTF-8 bytes). */
-  private val Newest: Ordering[Row] = new Ordering[Row] {
-    private def slot(x: Row, y: Row, i: Int): Int = (x.isNullAt(i), y.isNullAt(i)) match {
-      case (true, true) => 0
-      case (true, false) => -1
-      case (false, true) => 1
-      case _ => (x.get(i), y.get(i)) match {
-        case (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-        case (a: java.lang.Long, b: java.lang.Long) => a.compareTo(b)
-        case (a: java.lang.Double, b: java.lang.Double) =>
-          if (a.doubleValue == b.doubleValue) 0 else java.lang.Double.compare(a, b)
-        case (a: java.sql.Timestamp, b: java.sql.Timestamp) => a.compareTo(b)
-        case (a: java.time.Instant, b: java.time.Instant) => a.compareTo(b)
-        case (a, b) => throw new IllegalArgumentException(s"uncomparable schema values $a, $b")
-      }
-    }
-    def compare(x: Row, y: Row): Int = {
-      val byTx = java.lang.Long.compare(x.getLong(TxCol), y.getLong(TxCol))
-      if (byTx != 0) byTx
-      else (VstrCol until TxCol).iterator.map(slot(x, y, _)).find(_ != 0).getOrElse(0)
-    }
-  }
+  private val ManyValue = UTF8String.fromString(CardinalityMany)
 
   /** A FactDb whose cardinality handling follows its own schema facts. */
   def applySchema(db: FactDb, asOfTx: Long = Long.MaxValue): FactDb =

@@ -587,13 +587,19 @@ object GraphOps {
                        (implicit spark: SparkSession): DataFrame = {
     val e = edgeDf.select(col("src").cast("long"), col("dst").cast("long"))
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // hash-align the loop invariants ONCE: weighted by src, nodes by
-    // node. Each iteration's contribution join (weighted.src =
-    // msums.dst, the message sums exiting their groupBy already
-    // dst-partitioned) is then co-partitioned — the edge set never
-    // reshuffles across iterations, and the only per-round Exchange is
-    // the contribution aggregation itself (localCheckpoint preserves
-    // the physical partitioning in the truncated plan).
+    // hash-align the loop invariants once: weighted by src, nodes by
+    // node. With adaptive execution OFF, localCheckpoint keeps that
+    // physical partitioning in the truncated plan, so each iteration's
+    // contribution join (weighted.src = msums.dst, the message sums
+    // exiting their groupBy already dst-partitioned) is co-partitioned:
+    // the edge set is not reshuffled and the only per-round Exchange is
+    // the contribution aggregation. With AQE ON (Spark's default, and
+    // every graft session's), the checkpointed frame reports
+    // UnknownPartitioning(0) (an AdaptiveSparkPlanExec exposes no
+    // output partitioning), so the planner may shuffle the edge set
+    // again in every round's join; the repartition then only fixes the
+    // layout the edges were materialised in. That per-round cost has
+    // not been measured.
     val weighted = e.join(outDeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
       .repartition(col("src"))

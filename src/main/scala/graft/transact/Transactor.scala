@@ -1,7 +1,10 @@
 package graft.transact
 
-import graft.core.{FactDb, FactStore, Schema}
+import scala.collection.immutable.TreeMap
+
+import graft.core.{DriverDelta, FactDb, FactStore, Schema, Versions}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.Bridge
 
@@ -31,11 +34,24 @@ import org.apache.spark.sql.graft.Bridge
   *    single leaf over that buffer — a local relation up to `FoldRows`
   *    rows, past it one parallelized RDD of at most
   *    `defaultParallelism` partitions — so log partitions and plan
-  *    leaves stay constant however many transactions ran.
+  *    leaves stay constant however many transactions ran. That log is
+  *    what `historical` reads.
+  *  - the same rows are indexed by (e, a), each key's version chain
+  *    structurally shared (`core.Versions`). The published `FactDb`
+  *    carries that index (`core.DriverDelta`), so its `snapshot(t)`
+  *    resolves the delta as of `t` on the driver, under the windows'
+  *    own rules, and unions the live rows, as one leaf of the same
+  *    kind, with the windowed base: no window runs over the delta. A
+  *    transaction that writes a base entity (an id below
+  *    `firstEntityId`, i.e. an update of a `Graft.over` base log) ends
+  *    that: reads as of it or later run the windows over the whole log,
+  *    since the base and delta (e, a) keys are no longer disjoint.
   *  - each `unifydb/schema` / `unifydb/cardinality` op is recorded with
   *    its tx at commit, so the cardinality-many set as of any tx
-  *    resolves in memory (`Session.dbAsOf`); a session over an existing
-  *    log reads that log's schema ops once, at open.
+  *    resolves in memory (`Session.dbAsOf`), and each
+  *    `unifydb/txInstant`, so `Session.txAsOfInstant` runs no job; a
+  *    session over an existing log reads that log's schema ops and tx
+  *    instants once, at open, in one job.
   *
   * Bulk ingest bypasses this path via FactStore.melt.
   */
@@ -119,27 +135,56 @@ object Transactor {
   private[graft] val FoldRows = 4096
 
   /** What a session has committed, published whole at each commit.
-    * `delta` holds every transacted fact as a converted catalyst row
-    * (structurally shared between successive values) and `schema`
-    * every schema op with its tx. */
-  private final case class Committed(db: FactDb, delta: Vector[InternalRow],
-                                     schema: Schema.History)
+    * `delta` holds every transacted fact as a converted catalyst row and
+    * `ops` the same rows indexed by (e, a) (both structurally shared
+    * between successive values); `schema` holds every schema op with
+    * its tx, `instants` the tx instants, and `baseTouchedTx` the first
+    * tx that wrote a base entity, if any. */
+  private final case class Committed(db: FactDb, delta: Vector[InternalRow], ops: Versions,
+                                     schema: Schema.History, instants: Instants,
+                                     baseTouchedTx: Option[Long])
+
+  /** Every recorded `unifydb/txInstant` value, kept as a staircase:
+    * instant → the newest tx that recorded an instant at or before it,
+    * both ascending. `txAt` is the log's own answer,
+    * max(tx | txInstant <= instant), with no job. */
+  private[transact] final case class Instants(steps: TreeMap[Long, Long]) {
+    /** Record the `unifydb/txInstant` facts among `rows`, whose txs are
+      * at least every tx recorded so far. */
+    def ++(rows: Iterable[InternalRow]): Instants =
+      rows.foldLeft(this) { (m, r) =>
+        if (r.getUTF8String(1).toString != TxInstantAttr || r.isNullAt(4)) m
+        else {
+          val (instant, tx) = (r.getLong(4), r.getLong(8))
+          if (m.txAt(instant).exists(_ >= tx)) m
+          else Instants(m.steps.rangeUntil(instant).updated(instant, tx))
+        }
+      }
+    def txAt(instant: Long): Option[Long] = steps.rangeTo(instant).lastOption.map(_._2)
+  }
+  private[transact] object Instants {
+    val empty: Instants = Instants(TreeMap.empty)
+  }
+
+  private val TxInstantAttr = "unifydb/txInstant"
 
   /** One connection's transactor. `transact` commits atomically: under
     * one lock it validates the statements, mints the tx id and entity
     * ids, appends the facts and publishes the new database value, so
     * concurrent callers get distinct consecutive tx ids and a rejected
     * transaction consumes no id. Reads (`db`, `dbAsOf`) take no lock. */
-  final class Session(val spark: SparkSession, base: FactDb,
-                      firstTx: Long, firstEntityId: Long,
-                      clock: () => Long = () => System.currentTimeMillis(),
-                      transforms: Seq[Transform] = Seq(newUserTransform()),
-                      reportFilters: Seq[ReportFilter] = Seq(redactSensitive),
-                      baseSchema: Schema.History = Schema.History.empty) {
+  final class Session private[transact] (val spark: SparkSession, base: FactDb,
+                                          firstTx: Long, firstEntityId: Long,
+                                          clock: () => Long = () => System.currentTimeMillis(),
+                                          transforms: Seq[Transform] = Seq(newUserTransform()),
+                                          reportFilters: Seq[ReportFilter] = Seq(redactSensitive),
+                                          baseSchema: Schema.History = Schema.History.empty,
+                                          baseInstants: Instants = Instants.empty) {
 
     private var nextTx = firstTx
     private var nextId = firstEntityId
-    @volatile private var committed = Committed(base, Vector.empty, baseSchema)
+    @volatile private var committed =
+      Committed(base, Vector.empty, Versions.empty, baseSchema, baseInstants, None)
     private val toRow = Bridge.rowConverter(FactStore.factSchema)
 
     /** The committed database: the base log unioned with one leaf over
@@ -154,6 +199,11 @@ object Transactor {
       val c = committed
       c.db.copy(cardMany = c.db.cardMany ++ c.schema.cardMany(asOfTx, c.db.cardMany, c.db.versioned))
     }
+
+    /** The newest tx whose `unifydb/txInstant` is <= `instant` (-1 if
+      * none), from the instants recorded at commit and read from a base
+      * log at open: no Spark job. */
+    def txAsOfInstant(instant: Long): Long = committed.instants.txAt(instant).getOrElse(-1L)
 
     private var tempCounter = 0L
     private def freshTemp(): String = { tempCounter += 1; s"graft.temp-$tempCounter" }
@@ -209,7 +259,7 @@ object Transactor {
         // contract (transact_test.clj asserts tempids keys include
         // "unifydb.tx") — keep the reference's name so verbatim users
         // find it
-        Add("unifydb.tx", "unifydb/txInstant", clock())
+        Add("unifydb.tx", TxInstantAttr, clock())
       val prior = committed
       val types = checkSlots(expanded, prior.db.attrTypes)
       // ids are minted into locals and published only with the commit:
@@ -242,13 +292,19 @@ object Transactor {
         }
         Row(e, a, vtype, vstr, vlong, vdbl, vts, vref, tx, added)
       }
-      val delta = prior.delta ++ rows.map(toRow)
-      val deltaFrame = Bridge.rowsFrame(spark, FactStore.factSchema, delta, FoldRows)
+      val converted = rows.map(toRow)
+      val delta = prior.delta ++ converted
+      val ops = prior.ops ++ converted
+      val baseTouchedTx = prior.baseTouchedTx
+        .orElse(Option.when(facts.exists(_._1 < firstEntityId))(txId))
+      val log = base.log.unionAll(Bridge.rowsFrame(spark, FactStore.factSchema, delta, FoldRows))
       committed = Committed(
-        FactDb(base.log.unionAll(deltaFrame), prior.db.attrTypes ++ types,
-          prior.db.cardMany, versioned = true),
-        delta,
-        prior.schema ++ rows.filter(r => Schema.Attrs.contains(r.getString(1))))
+        FactDb(log, prior.db.attrTypes ++ types, prior.db.cardMany, versioned = true,
+          delta = Some(new DriverDelta(log, base.log, ops, baseTouchedTx, FoldRows))),
+        delta, ops,
+        prior.schema ++ converted.filter(r => Schema.Attrs.contains(r.getUTF8String(1).toString)),
+        prior.instants ++ converted,
+        baseTouchedTx)
       nextTx = txId + 1
       nextId = id
       TxReport(txId, temps.toMap, facts)
@@ -293,9 +349,15 @@ object Transactor {
   }
 
   /** Session over an existing db (e.g. bulk-melted base tables). Its
-    * schema ops are read from the base log here, once (one Spark job). */
+    * schema ops and tx instants are read from the base log here, once
+    * (one Spark job). */
   def session(spark: SparkSession, db: FactDb, firstTx: Long,
-              firstEntityId: Long): Session =
+              firstEntityId: Long): Session = {
+    val toRow = Bridge.rowConverter(FactStore.factSchema)
+    val (instants, schemaOps) = db.log.filter(col("a").isin(Schema.Attrs :+ TxInstantAttr: _*))
+      .collect().toSeq.map(toRow).partition(_.getUTF8String(1).toString == TxInstantAttr)
     new Session(spark, db, firstTx, firstEntityId,
-      baseSchema = Schema.History.of(db.log))
+      baseSchema = Schema.History.empty ++ schemaOps,
+      baseInstants = Instants.empty ++ instants.sortBy(_.getLong(8)))
+  }
 }

@@ -1529,12 +1529,14 @@ class GroundTruthSpec extends SparkSpec {
   test("zipfFit: an exact power law recovers its slope; r2 ~ 1") {
     // plant freq(rank) = round(1e6 * rank^-0.8) for ranks 1..200 using
     // distinct single-token docs — the fit must recover -0.8 on the
-    // quantized-log normal equations (quantization error ~1e-4)
-    val rows = (1 to 200).flatMap { r =>
-      val freq = math.round(1e6 * math.pow(r.toDouble, -0.8)).toInt
-      Seq.fill(freq)(s"tok${"%04d".format(r)}")
-    }.zipWithIndex.map { case (w, i) => (i.toLong, w) }
-    val docs = rows.toDF("doc_id", "text").repartition(8)
+    // quantized-log normal equations (quantization error ~1e-4). The
+    // ~9 M docs are generated by the executors: ranks exploded by
+    // their frequency, never materialised on the driver.
+    val docs = spark.range(1, 201).select(col("id").as("r"),
+        explode(sequence(lit(1L), round(lit(1e6) * pow(col("id"), -0.8)).cast("long"))).as("k"))
+      .select((col("r") * 10000000L + col("k")).as("doc_id"),
+        format_string("tok%04d", col("r")).as("text"))
+      .repartition(8)
     val out = TextAnalysis.zipfFit(docs, topRanks = 200).head()
     assert(out.getAs[Long]("n_terms") === 200L)
     val slope = out.getAs[Double]("zipf_slope")

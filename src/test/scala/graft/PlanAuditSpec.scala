@@ -358,6 +358,25 @@ class PlanAuditSpec extends SparkSpec {
       s"expected exactly one corpus explode in the final plan:\n$finalSection")
   }
 
+  // q_concurrency and q_interval_coalesce feed one boundary relation
+  // to several consumers without a checkpoint, relying on AQE exchange
+  // reuse to run the sessionize subtree (events scan + per-user window
+  // exchange) once. A refactor that breaks subtree identity would
+  // re-scan the corpus per consumer with identical rows, so pin the
+  // reuse and the single scan on the final adaptive plan.
+  Seq("q_concurrency", "q_interval_coalesce").foreach { name =>
+    test(s"$name: one events scan, the boundary subtree served by exchange reuse") {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val finalSection = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      assert(finalSection.contains("ReusedExchange"),
+        s"expected the boundary subtree's exchange to be reused:\n$finalSection")
+      assert("Scan parquet|FileScan parquet".r.findAllIn(finalSection).size === 1,
+        s"expected one events scan in the final plan:\n$finalSection")
+    }
+  }
+
   test("corpus_profile: one fused corpus scan, one grouping-sets shuffle") {
     // every per-row metric (lang id, quality, PII probe) must ride ONE
     // projection over ONE scan; the rollup is the only exchange. A

@@ -140,4 +140,49 @@ class TransactSpec extends SparkSpec {
     assert(after(2) === before(2))
     assert(g.asOf(upd.txId).query(join).count() === 2)
   }
+
+  test("Graft.asOfInstant runs no job and answers as the log does, on Graft.open and Graft.over") {
+    var clock = 1000L
+    val base = Graft.open(spark, () => { clock += 1000; clock }) // instants 2000, 3000, 4000
+    (1 to 3).foreach(i => base.transact(Seq(MapForm(Seq("n" -> i.toLong)))))
+    val over = Graft.over(spark, base.session.db, firstTx = 4, firstEntityId = 100)
+    over.transact(Seq(MapForm(Seq("n" -> 4L)))) // instant: the wall clock
+    // newest tx whose txInstant is <= the instant, derived from the log
+    def fromLog(g: Graft, instant: Long): Long = {
+      val tx = g.session.db.log
+        .filter(col("a") === "unifydb/txInstant" && col("vlong") <= instant)
+        .agg(org.apache.spark.sql.functions.max(col("tx"))).head()
+      if (tx.isNullAt(0)) -1L else tx.getLong(0)
+    }
+    val q = Query(find = Seq(FVar("n")), where = Pattern(V("e"), C("n"), V("n")))
+    // before the first tx, between txs, at a tx, after the last
+    for ((g, label) <- Seq(base -> "open", over -> "over");
+         instant <- Seq(500L, 2500L, 3000L, 4000L, 4001L, Long.MaxValue)) {
+      val (handle, n) = jobs(g.asOfInstant(instant))
+      assert(n === 0, s"$label asOfInstant($instant) ran $n jobs")
+      val expected = fromLog(g, instant)
+      assert(g.session.txAsOfInstant(instant) === expected, s"$label at $instant")
+      assert(rows(handle.query(q)) === rows(g.asOf(expected).query(q)), s"$label at $instant")
+    }
+    assert(over.session.txAsOfInstant(Long.MaxValue) === 4L)
+  }
+
+  test("a repeated ancestors read at one session state hits the fixpoint cache") {
+    val g = Graft.open(spark)
+    var last = g.transact(Seq(MapForm(Seq("name" -> "p0"), tempId = Some("p")))).tempIds("p")
+    (1 to 4).foreach { i =>
+      last = g.transact(Seq(MapForm(Seq("name" -> s"p$i", "parent" -> g.session.EntityRef(last)),
+        tempId = Some("p")))).tempIds("p")
+    }
+    val anc = Query(find = Seq(FVar("x"), FVar("y")), where = RuleApp("anc", V("x"), V("y")),
+      rules = Seq(
+        Rule("anc", Seq(V("x"), V("y")), Pattern(V("x"), C("parent"), V("y"))),
+        Rule("anc", Seq(V("x"), V("y")), And(
+          Pattern(V("x"), C("parent"), V("m")), RuleApp("anc", V("m"), V("y"))))))
+    assert(Compiler.Db(g.db) === Compiler.Db(g.db)) // one committed state, one cache key
+    val (first, cold) = jobs(g.query(anc).collect())
+    val (again, reuse) = jobs(g.query(anc).collect())
+    assert(first.length === 10 && again.length === 10)
+    assert(reuse <= 3, s"repeated ancestors read ran $reuse jobs ($cold cold)")
+  }
 }
