@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Headline set: every subsystem represented (SURVEY.md §6).
     * dl_asof_bucketed exercises snapshot() over the FactLogIO bucketed
@@ -60,19 +58,11 @@ object Bench {
     // preserves), not a bigger heap.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep prunable bucketed scans bucketed: the planner otherwise
-      // un-buckets a scan with no distribution-needing parent and loses
-      // the single-bucket prune of EAVT point reads (FactDb.entity).
-      // This pins every bucketed scan to one task per bucket, so the
-      // bucket count IS the scan-parallelism ceiling — graft sizes it
-      // by volume up to the core budget (DatalogQueries.bucketedDb).
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    // Bucketed scans stay bucketed (SparkEntry.localSession). This pins
+    // every bucketed scan to one task per bucket, so the bucket count IS
+    // the scan-parallelism ceiling — graft sizes it by volume up to the
+    // core budget (DatalogQueries.bucketedDb).
+    val spark = SparkEntry.localSession(cpus.toInt, shufflePartitions.toInt)
       // Broadcast thresholds stay at Spark's conservative defaults, a
       // decision the 100x scale probe made empirically: a 64 MB STATIC
       // threshold OOM'd dl_agg's pattern-join broadcast (RLE'd parquet of

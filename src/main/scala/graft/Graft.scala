@@ -60,16 +60,16 @@ final class Graft private (val session: Transactor.Session,
   /** MULTIPLE pull expressions over the same entity set — the reference
     * runs each `(pull ?e [...])` in a :find as its OWN generated
     * sub-query and zips the resulting maps per row (reference
-    * query_test.clj:566-570, query/pull.clj). Here each spec evaluates
-    * independently (one pullNested each) and equijoins back on `e`:
-    * one row per entity, one named struct column per pull. */
-  def pullMany(ids: DataFrame, specs: Seq[(String, Pull.Spec)]): DataFrame =
+    * query_test.clj:566-570, query/pull.clj). Here every spec walks one
+    * shared snapshot and equijoins back on `e`: one row per entity,
+    * one named struct column per pull. */
+  def pullMany(ids: DataFrame, specs: Seq[(String, Pull.Spec)]): DataFrame = {
+    val d = db
+    val snap = d.snapshot(asOfTx)
     specs.foldLeft(ids) { case (acc, (name, spec)) =>
-      acc.join(
-        Pull.pullNested(db, ids, spec, asOfTx)
-          .withColumnRenamed("pulled", name),
-        Seq("e"), "left")
+      acc.join(Pull.nested(d, snap, ids, spec).withColumnRenamed("pulled", name), Seq("e"), "left")
     }
+  }
 }
 
 object Graft {

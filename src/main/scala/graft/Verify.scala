@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,19 +14,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2 && !sqlOnly) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries INT64 TIMESTAMP(NANOS) which vanilla Spark
-      // rejects; read as long nanos (TestData converts where needed).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep prunable bucketed scans bucketed: the planner otherwise
-      // un-buckets a scan with no distribution-needing parent and loses
-      // the single-bucket prune of EAVT point reads (FactDb.entity)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus.toInt, cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -342,8 +342,9 @@ case class FactDb(log: DataFrame, attrTypes: Map[String, String],
     * pick. A database value published by a transactor session skips
     * both for its delta: the session resolved the delta on the driver
     * under the same rules (`DriverDelta`, `Versions.live`), so the
-    * snapshot is the windowed base unioned with one leaf of live delta
-    * facts, both under this db's cardinality-many set. The windows
+    * snapshot is the base, resolved under its own `versioned` flag (an
+    * unversioned base stays a scan), unioned with one leaf of live
+    * delta facts, both under this db's cardinality-many set. The windows
     * still cover the whole log when `delta` is None (a db not built by
     * a session, a `union`, a `copy` onto another log) and for reads as
     * of or after the first tx whose delta wrote a base entity. */
@@ -353,9 +354,10 @@ case class FactDb(log: DataFrame, attrTypes: Map[String, String],
     // scan+filter (this is the 100 TB fast path: immutable fact
     // partitions resolve to themselves).
     if (!versioned) return historical(asOfTx)
-    delta.filter(_.log eq log).flatMap(d => d.resolved(asOfTx, cardMany).map(d.base -> _)) match {
-      case Some((base, resolvedDelta)) =>
-        copy(log = base, delta = None).snapshot(asOfTx).unionAll(resolvedDelta)
+    delta.filter(_.log eq log).flatMap(d => d.resolved(asOfTx, cardMany).map(d -> _)) match {
+      case Some((d, resolvedDelta)) =>
+        copy(log = d.base, versioned = d.baseVersioned, delta = None).snapshot(asOfTx)
+          .unionAll(resolvedDelta)
       case None =>
         val perValue = Window.partitionBy(col("e"), col("a"), col("vtype"),
             col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"))
@@ -399,7 +401,7 @@ case class FactDb(log: DataFrame, attrTypes: Map[String, String],
     * can hold the entity (SelectedBucketsCount 1/N, plan-pinned) — the
     * closest a Spark job gets to an OLTP point read. Requires
     * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`
-    * (set by graft's session builders): the auto-conversion rule sees
+    * (set by `graft.SparkEntry.localSession`): the auto-conversion rule sees
     * no distribution-needing parent and would flatten the scan,
     * silently losing the prune. The remaining gap
     * to the reference's ms-latency B-tree read is the job-submission

@@ -102,15 +102,18 @@ object Versions {
 /** A session's transacted delta, resolved on the driver for
   * `FactDb.snapshot`. `log` is the session's whole log, `base` ∪ one
   * leaf over the raw delta; `ops` indexes that delta's ops.
-  * `baseTouchedTx` is the first tx whose delta wrote an entity of the
-  * base (an id below the session's first minted entity id), if any:
+  * `baseVersioned` is the base database's own `versioned` flag, under
+  * which the base half of a driver-resolved read resolves, so an
+  * unversioned base stays a plain scan. `baseTouchedTx` is the first
+  * tx whose delta wrote an entity of the base (an id below the
+  * session's first minted entity id), if any:
   * the (e, a) keys of the delta and the base are
   * disjoint only before it, so a read as of it or later stays windowed
   * over the whole log. Owned by the committed database value, so two
   * reads of one committed state carry the same handle (and stay equal
   * fixpoint-cache keys). */
-final class DriverDelta(val log: DataFrame, val base: DataFrame, ops: Versions,
-                        baseTouchedTx: Option[Long], localMaxRows: Int) {
+final class DriverDelta(val log: DataFrame, val base: DataFrame, val baseVersioned: Boolean,
+                        ops: Versions, baseTouchedTx: Option[Long], localMaxRows: Int) {
 
   /** The delta's live facts as of `asOfTx` under the read's own
     * cardinality-many set, as one leaf (`Bridge.rowsFrame`), or None

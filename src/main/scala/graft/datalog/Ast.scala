@@ -123,20 +123,22 @@ final case class FAgg(fn: String, v: V, alias: String) extends FindExpr
 /** Pull expression in :find (reference `(pull ?e [...])`,
   * src/unifydb/query/pull.clj:7-21; exercised at
   * test/unifydb/query_test.clj:521-570): each pull runs as its own
-  * sub-query over the result entity set — the compiler evaluates one
-  * [[Pull.pullFlat]] per FPull against the distinct bindings of `v`
-  * and left-joins the pulled attribute columns back onto the frame
-  * set, so multi-pull finds keep the reference's
-  * one-subquery-per-pull semantics. Output columns are named by the
-  * pulled attrs (flat), matching the typed dl_pull face; `alias` is
-  * the pull var's name (the pulled columns carry the user-facing
-  * names). Not combinable with aggregates in the same :find (the
-  * reference does not group pulls either).
+  * sub-query over the result entity set — the compiler runs the pull
+  * walk ([[Pull.pullNested]], one plan per nesting level) once per
+  * FPull against the distinct bindings of `v`, every FPull of the
+  * :find over one shared snapshot, and left-joins the pulled columns
+  * back onto the frame set, so multi-pull finds keep the reference's
+  * one-subquery-per-pull semantics. By default the walk's result is
+  * projected flat ([[Pull.pullFlat]]'s face): output columns named by
+  * the pulled attrs, matching the typed dl_pull face; `alias` is the
+  * pull var's name (the pulled columns carry the user-facing names).
+  * Not combinable with aggregates in the same :find (the reference
+  * does not group pulls either).
   *
-  * `nested = true` compiles through [[Pull.pullNested]] instead: ONE
-  * struct column named `pulled` — the faithful shape of the
-  * reference's nested result maps (arrays of structs for card-many
-  * refs, null-filled fields where the reference omits map keys).
+  * `nested = true` keeps the walk's own shape instead: ONE struct
+  * column named `pulled` — the faithful shape of the reference's
+  * nested result maps (arrays of structs for card-many refs,
+  * null-filled fields where the reference omits map keys).
   * QueryText selects it automatically when the flat face would
   * produce colliding column names (same attr pulled at two levels). */
 final case class FPull(v: V, spec: Pull.Spec, alias: String,

@@ -86,19 +86,19 @@ object Compiler {
     val pulls = q.find.collect { case p: FPull => p }
     if (pulls.nonEmpty) {
       // Each pull is its OWN sub-query over the result entity set
-      // (reference pull.clj: one generated sub-query per pull), then a
-      // left join back on the pull var — frames stay distributed, no
-      // driver-side reassembly. Set semantics group on find vars ∪
-      // pull vars, so one output row per distinct entity binding.
+      // (reference pull.clj: one generated sub-query per pull), all
+      // over one snapshot, then a left join back on the pull var —
+      // frames stay distributed, no driver-side reassembly. Set
+      // semantics group on find vars ∪ pull vars, so one output row per
+      // distinct entity binding.
       require(aggs.isEmpty, "pull expressions cannot mix with aggregates in :find")
       val keyVars = (vars.map(_.v.name) ++ pulls.map(_.v.name)).distinct
       var out = frames.select(keyVars.map(col): _*).distinct()
       val pulledCols = scala.collection.mutable.ArrayBuffer.empty[String]
+      val snap = db.facts.snapshot(db.asOf)
       pulls.foreach { p =>
-        val ids = out.select(col(p.v.name).as("e")).distinct()
-        val pulled =
-          if (p.nested) Pull.pullNested(db.facts, ids, p.spec, db.asOf)
-          else Pull.pullFlat(db.facts, ids, p.spec, db.asOf)
+        val nested = Pull.nested(db.facts, snap, out.select(col(p.v.name).as("e")).distinct(), p.spec)
+        val pulled = if (p.nested) nested else Pull.flatten(db.facts, nested, p.spec)
         val attrCols = pulled.columns.filterNot(_ == "e").toSeq
         attrCols.foreach { c =>
           require(!pulledCols.contains(c),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.graft.Bridge
   * (entity → entity, labeled by attribute). This module exposes them
   * as: (1) DataFrame-iterative algorithms (BFS, temporal reachability)
   * that scale past GraphX's RDD model and stay in Tungsten; and
-  * (2) GraphX algorithms (CC, PageRank, triangles) where the Pregel
+  * (2) GraphX algorithms (PageRank, triangles) where the Pregel
   * formulation is the natural fit. As-of time travel composes for
   * free: build the edge set from `FactDb.snapshot(asOfTx)` and every
   * algorithm runs against the graph as it existed at that tx.
@@ -195,16 +195,11 @@ object GraphOps {
     Graph.fromEdges(edgeRdd, defaultValue = 0)
   }
 
-  /** Connected components via GraphX Pregel (component = min vertex id). */
-  def connectedComponents(edgeDf: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val cc = toGraphX(edgeDf).connectedComponents().vertices
-    spark.createDataFrame(cc).toDF("node", "component")
-  }
-
   /** DataFrame-native connected components: alternating large-star /
     * small-star rounds (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14). Component = min node id, same
-    * contract as [[connectedComponents]].
+    * MapReduce and Beyond", SoCC'14). Component = min node id, the
+    * contract of GraphX's `Graph.connectedComponents` (GroundTruthSpec
+    * checks it against that oracle).
     *
     * This is the 100×-scale path: O(log n) rounds of plain
     * groupBy/join shuffles that stay inside Tungsten codegen and AQE

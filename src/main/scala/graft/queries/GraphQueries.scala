@@ -68,7 +68,7 @@ object GraphQueries {
       implicit val sp: SparkSession = s
       // nation->region bipartite ref edges: components == regions.
       // Served by the DataFrame-native large-star/small-star CC (the
-      // 100x-scale path); GraphX parity is spec-pinned in GraphSpec.
+      // 100x-scale path); GraphX parity is spec-pinned in GroundTruthSpec.
       val e = GraphOps.edges(db(s, dir)).filter(col("label") === "n_regionkey_ref")
       GraphOps.ccDataFrame(e)
     }),

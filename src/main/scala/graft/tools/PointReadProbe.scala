@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.sources.{Catalog, FactLogIO, PointRead}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Micro-benchmark for the OLTP point-read paths: the Spark-job read
@@ -14,14 +13,7 @@ import org.apache.spark.sql.functions.col
 object PointReadProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(8, 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val db = graft.core.TestData.eventsDb(spark, sfDir)
     val table = "graft_pointread_probe"

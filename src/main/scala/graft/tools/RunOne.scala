@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev loop helper: run ONE SparkEntry query against a testdata dir and
   * dump its result (and optionally its plan) — the single-operator
   * iteration loop without paying a full Verify pass.
@@ -11,14 +9,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(8, 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     if (args.contains("explain")) df.explain("formatted")

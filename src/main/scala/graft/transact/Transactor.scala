@@ -300,7 +300,7 @@ object Transactor {
       val log = base.log.unionAll(Bridge.rowsFrame(spark, FactStore.factSchema, delta, FoldRows))
       committed = Committed(
         FactDb(log, prior.db.attrTypes ++ types, prior.db.cardMany, versioned = true,
-          delta = Some(new DriverDelta(log, base.log, ops, baseTouchedTx, FoldRows))),
+          delta = Some(new DriverDelta(log, base.log, base.versioned, ops, baseTouchedTx, FoldRows))),
         delta, ops,
         prior.schema ++ converted.filter(r => Schema.Attrs.contains(r.getUTF8String(1).toString)),
         prior.instants ++ converted,

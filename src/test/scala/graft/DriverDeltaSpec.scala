@@ -6,6 +6,7 @@ import graft.core.{FactDb, FactStore}
 import graft.transact.Transactor
 import graft.transact.Transactor.{Add, MapForm, Retract, TxStmt}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** A transacted session's snapshot, its delta resolved on the driver
   * (`DriverDelta`, `Versions.live`), must equal `FactDb.snapshot`'s
@@ -144,7 +145,9 @@ class DriverDeltaSpec extends SparkSpec {
   }
 
   test("Graft.over without delta facts on base entities: base windowed, delta resolved, equal at every tx") {
-    Seq(base(), base().copy(versioned = false)).foreach { b =>
+    // the unversioned base keeps its contract, one version per fact: an
+    // unversioned base reads as its scan (see the next test)
+    Seq(base(), base().copy(log = base().snapshot(), versioned = false)).foreach { b =>
       val g = Graft.over(spark, b, firstTx = 4, firstEntityId = 1000)
       val tx = new Tx(g)
       tx(MapForm(Seq("s" -> "n", "r" -> g.session.EntityRef(100L)), tempId = Some("q")))
@@ -155,6 +158,29 @@ class DriverDeltaSpec extends SparkSpec {
       val last = tx(Retract(tx.ents("q"), "s", "n"))
       assertAgrees(g, last, s"over, versioned ${b.versioned}")
     }
+  }
+
+  test("Graft.over an unversioned base: its half stays a scan until a transaction writes a base entity") {
+    def windows(g: Graft): Int = g.db.snapshot().queryExecution.optimizedPlan
+      .collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size
+    def baseRows(g: Graft) = multiset(g.db.snapshot().filter(col("e") < 1000))
+    val one = spark.createDataFrame(java.util.Arrays.asList(
+      Row(100L, "s", "s", "a", null, null, null, null, 1L, true)), FactStore.factSchema)
+    val g = Graft.over(spark, FactDb(one, Map("s" -> "vstr"), versioned = false),
+      firstTx = 2, firstEntityId = 1000)
+    val before = baseRows(g)
+    assert(windows(g) === 0)
+    g.transact(Seq(MapForm(Seq("s" -> "n"))))
+    assert(windows(g) === 0, "a transact of new entities keeps the base a scan")
+    assert(baseRows(g) === before)
+    g.transact(Seq(Add(100L, "s", "b")))
+    assert(windows(g) > 0, "a transact that writes a base entity resolves the whole log")
+    // a base that breaks the one-version contract reads as its scan
+    // before and after the first transact alike
+    val g2 = Graft.over(spark, base().copy(versioned = false), firstTx = 4, firstEntityId = 1000)
+    val before2 = baseRows(g2)
+    g2.transact(Seq(MapForm(Seq("s" -> "n"))))
+    assert(baseRows(g2) === before2)
   }
 
   test("Graft.over with delta facts on base entities: reads from that tx on run windowed") {

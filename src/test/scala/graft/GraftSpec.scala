@@ -79,6 +79,17 @@ class GraftSpec extends SparkSpec {
       .collect().map(r => r.getStruct(1).getString(0) ->
         r.getStruct(2).getString(0)).toMap
     assert(all === Map("Alice" -> "red", "Bob" -> "green", "Carl" -> "yellow"))
+    // two specs through the same card-many ref, each with its own
+    // sub-spec; Bob has no friends and no status
+    val shared = conn.pullMany(Seq(alice, bob).toDF("e"),
+      Seq("p_friends" -> Pull.Spec(Seq("name"), Seq("friends" -> Pull.Spec(Seq("name")))),
+          "p_colors" -> Pull.Spec(Nil, Seq("friends" -> Pull.Spec(Seq("favorite-color"),
+            Seq("status" -> Pull.Spec(Seq("text"))))))))
+      .collect().map(r => r.getLong(0) -> (r.getStruct(1), r.getStruct(2))).toMap
+    import org.apache.spark.sql.Row
+    assert(shared(alice) === (Row("Alice", Seq(Row("Bob"), Row("Carl"))),
+      Row(Seq(Row("green", null), Row("yellow", Row("Feeling bad"))))))
+    assert(shared(bob) === (Row("Bob", null), Row(null)))
   }
 
   test("connection workflow: transact, query, as-of, retract, pull") {
@@ -118,5 +129,27 @@ class GraftSpec extends SparkSpec {
     val pulled = conn.pullFlat(Seq(ben).toDF("e"), Pull.Spec(Seq("name", "salary")))
     val row = pulled.select("name", "salary").head()
     assert(row.getString(0) === "Ben" && row.getLong(1) === 60000L)
+
+    // pull as of a tx between a card-one ref re-point and a tag retraction
+    import graft.core.Schema
+    import org.apache.spark.sql.Row
+    conn.transact(Seq(MapForm(Seq(
+      Schema.SchemaAttr -> "tag", Schema.CardinalityAttr -> Schema.CardinalityMany))))
+    val r = conn.transact(Seq(
+      MapForm(Seq("nname" -> "PERU"), tempId = Some("n1")),
+      MapForm(Seq("nname" -> "JAPAN"), tempId = Some("n2"))))
+    val (n1, n2) = (r.tempIds("n1"), r.tempIds("n2"))
+    val p = conn.transact(Seq(MapForm(Seq("name" -> "P", "tag" -> "red", "tag" -> "blue",
+      "nation" -> conn.session.EntityRef(n1)), tempId = Some("p")))).tempIds("p")
+    val repoint = conn.transact(Seq(Add(p, "nation", conn.session.EntityRef(n2)))).txId
+    val retract = conn.transact(Seq(Retract(p, "tag", "blue"))).txId
+    val spec = Pull.Spec(Seq("name", "tag"), Seq("nation" -> Pull.Spec(Seq("nname"))))
+    def pulledAt(g: Graft): Row = g.pull(Seq(p).toDF("e"), spec).select("pulled").head().getStruct(0)
+    assert(pulledAt(conn.asOf(repoint - 1)) === Row("P", Seq("blue", "red"), Row("PERU")))
+    assert(pulledAt(conn.asOf(repoint)) === Row("P", Seq("blue", "red"), Row("JAPAN")))
+    assert(pulledAt(conn.asOf(retract - 1)) === Row("P", Seq("blue", "red"), Row("JAPAN")))
+    assert(pulledAt(conn) === Row("P", Seq("red"), Row("JAPAN")))
+    assert(conn.asOf(repoint).pullFlat(Seq(p).toDF("e"), spec).collect().map(_.toSeq).toSeq ===
+      Seq(Seq(p, "P", Seq("blue", "red"), "JAPAN")))
   }
 }

@@ -737,8 +737,9 @@ class GroundTruthSpec extends SparkSpec {
   test("ccDataFrame matches GraphX on the graph_cc fixture") {
     val e = GraphOps.edges(graft.core.TestData.staticDb(spark, "/root/testdata/sf0.001"))
       .filter(org.apache.spark.sql.functions.col("label") === "n_regionkey_ref")
-    val viaGraphX = GraphOps.connectedComponents(e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the oracle: GraphX Pregel connected components (component = min vertex id)
+    val viaGraphX = GraphOps.toGraphX(e).connectedComponents().vertices.collect()
+      .map { case (node, component) => node -> component }.toMap
     val viaDf = leakFree("ccDataFrame")(GraphOps.ccDataFrame(e))(longPairs)
     assert(viaDf === viaGraphX)
   }

@@ -414,7 +414,11 @@ class OperatorsSpec extends SparkSpec {
       (2L, "favorite-colors", "blue", 0L, true),
       (2L, "favorite-colors", "blue", 1L, false),
       (3L, "name", "Emily", 2L, true),
-      (3L, "favorite-colors", "yellow", 2L, true))
+      (3L, "favorite-colors", "yellow", 2L, true),
+      // every favorite color retracted: no live value
+      (4L, "name", "Dan", 3L, true),
+      (4L, "favorite-colors", "pink", 3L, true),
+      (4L, "favorite-colors", "pink", 4L, false))
     val rows = facts.map { case (e, a, v, tx, added) =>
       Row(e, a, "s", v, null, null, null, null, tx, added)
     }
@@ -435,6 +439,20 @@ class OperatorsSpec extends SparkSpec {
     val bob = nested.filter(col("e") === 2L).select("pulled").head().getStruct(0)
     assert(bob.getString(0) === "Bob")
     assert(bob.getSeq[String](1).toSeq === Seq("green", "red"))
+
+    // missing data, both faces: a card-many attr with no live value is
+    // null (not []), an id with no facts is one row of nulls, and
+    // duplicate ids keep their multiplicity
+    val more = Seq(2L, 4L, 9L, 9L).toDF("e")
+    val spec = Pull.Spec(Seq("name", "favorite-colors"))
+    val flatRows = Pull.pullFlat(db, more, spec).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getSeq[String](2)).map(_.toSeq)))
+    assert(flatRows.sortBy(_._1).toSeq === Seq((2L, Some("Bob"), Some(Seq("green", "red"))),
+      (4L, Some("Dan"), None), (9L, None, None), (9L, None, None)))
+    val nestedRows = Pull.pullNested(db, more, spec).collect()
+      .map(r => r.getLong(0) -> r.getStruct(1))
+    assert(nestedRows.sortBy(_._1).toSeq === Seq(2L -> Row("Bob", Seq("green", "red")),
+      4L -> Row("Dan", null), 9L -> Row(null, null), 9L -> Row(null, null)))
   }
 
   test("transactor + nested pull round-trip") {
@@ -449,5 +467,43 @@ class OperatorsSpec extends SparkSpec {
     val row = nested.select("pulled").collect().head.getStruct(0)
     assert(row.getString(0) === "Alice")
     assert(row.getStruct(1).getString(0) === "Feeling good")
+
+    // missing data through refs, both faces: an absent ref is a null
+    // struct, a present ref whose child has none of the sub-spec's
+    // attributes a struct of nulls, a card-many ref with no children
+    // null; the flat face has one row per card-many child and keeps a
+    // parent without children
+    import org.apache.spark.sql.Row
+    import graft.core.Schema
+    sess.transact(Seq(Transactor.MapForm(Seq(
+      Schema.SchemaAttr -> "friends", Schema.CardinalityAttr -> Schema.CardinalityMany))))
+    val r = sess.transact(Seq(
+      Transactor.MapForm(Seq("name" -> "Bob", "handle" -> "bob"), tempId = Some("bob")),
+      Transactor.MapForm(Seq("name" -> "Carl",
+        "status" -> Transactor.MapForm(Seq("mood" -> "meh"))), tempId = Some("carl"))))
+    val (alice, bob, carl) = (sess.db.snapshot().filter(col("a") === "name" && col("vstr") === "Alice")
+      .select("e").head().getLong(0), r.tempIds("bob"), r.tempIds("carl"))
+    sess.transact(Seq(
+      Transactor.Add(alice, "friends", sess.EntityRef(bob)),
+      Transactor.Add(alice, "friends", sess.EntityRef(carl))))
+    val spec = Pull.Spec(Seq("name"),
+      Seq("status" -> Pull.Spec(Seq("text")), "friends" -> Pull.Spec(Seq("handle"))))
+    val more = Seq(alice, alice, bob, carl, 99999L).toDF("e")
+    val db = sess.dbAsOf(Long.MaxValue) // friends cardinality-many
+    val nestedRows = Pull.pullNested(db, more, spec).collect()
+      .map(r => r.getLong(0) -> r.getStruct(1)).toSeq.sortBy(_._1)
+    assert(nestedRows === Seq(
+      alice -> Row("Alice", Row("Feeling good"), Seq(Row(null), Row("bob"))),
+      alice -> Row("Alice", Row("Feeling good"), Seq(Row(null), Row("bob"))),
+      bob -> Row("Bob", null, null),
+      carl -> Row("Carl", Row(null), null),
+      99999L -> Row(null, null, null)))
+    val flatRows = Pull.pullFlat(db, more, spec).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
+    assert(flatRows.sortBy(_.toString) === Seq(
+      (alice, "Alice", "Feeling good", "bob"), (alice, "Alice", "Feeling good", "bob"),
+      (alice, "Alice", "Feeling good", null), (alice, "Alice", "Feeling good", null),
+      (bob, "Bob", null, null), (carl, "Carl", null, null),
+      (99999L, null, null, null)).sortBy(_.toString))
   }
 }

@@ -11,15 +11,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // keep prunable bucketed scans bucketed: the planner otherwise
-    // un-buckets a scan with no distribution-needing parent and loses
-    // the single-bucket prune of EAVT point reads (FactDb.entity)
-    .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = SparkEntry.localSession(4, 4).getOrCreate()
 }
