@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,21 +43,38 @@ object FactStore {
     StructField("added", BooleanType, nullable = false)
   ))
 
+  /** The value slots in `factSchema` order, each with its `vtype` tag. */
+  val Slots: Seq[(String, String)] =
+    Seq("vstr" -> "s", "vlong" -> "l", "vdbl" -> "d", "vts" -> "t", "vref" -> "r")
+
   /** Value slot an attribute's values live in, by ingested Spark type. */
-  def slotFor(dt: DataType): (String, String) = dt match {
-    case StringType => ("vstr", "s")
-    case LongType | IntegerType | ShortType | ByteType => ("vlong", "l")
-    case DoubleType | FloatType | _: DecimalType => ("vdbl", "d")
-    case TimestampType | TimestampNTZType | DateType => ("vts", "t")
-    case BooleanType => ("vlong", "l")
-    case other => throw new IllegalArgumentException(s"unsupported fact value type $other")
+  def slotFor(dt: DataType): (String, String) = {
+    val slot = dt match {
+      case StringType => "vstr"
+      case LongType | IntegerType | ShortType | ByteType | BooleanType => "vlong"
+      case DoubleType | FloatType | _: DecimalType => "vdbl"
+      case TimestampType | TimestampNTZType | DateType => "vts"
+      case other => throw new IllegalArgumentException(s"unsupported fact value type $other")
+    }
+    slot -> Tag(slot)
   }
 
-  private def nullCols(except: String): Seq[Column] =
-    Seq("vstr", "vlong", "vdbl", "vts", "vref").filterNot(_ == except).map { c =>
-      val dt = factSchema(c).dataType
-      lit(null).cast(dt).as(c)
-    }
+  private val Tag: Map[String, String] = Slots.toMap
+
+  /** `df` projected to fact rows, the one place their layout is
+    * written: `factSchema` order, `value` cast into `slot`, every other
+    * value slot null and `vtype` the slot's tag. */
+  def facts(df: DataFrame, e: Column, a: String, slot: String, value: Column,
+            tx: Column, added: Column = lit(true)): DataFrame =
+    df.select(Seq(e.as("e"), lit(a).as("a"), lit(Tag(slot)).as("vtype")) ++
+      Slots.map { case (s, _) =>
+        (if (s == slot) value else lit(null)).cast(factSchema(s).dataType).as(s)
+      } ++ Seq(tx.as("tx"), added.as("added")): _*)
+
+  /** The driver-side twin of [[facts]]: one fact as a `factSchema` row. */
+  def factRow(e: Long, a: String, slot: String, value: Any, tx: Long, added: Boolean): Row =
+    Row.fromSeq(Seq(e, a, Tag(slot)) ++
+      Slots.map { case (s, _) => if (s == slot) value else null } ++ Seq(tx, added))
 
   /** Melt a relational table into facts: one entity per row (id =
     * `idExpr` + `base`), one fact per non-null column value. Every
@@ -69,32 +86,18 @@ object FactStore {
     */
   def melt(df: DataFrame, idExpr: Column, base: Long, tx: Long,
            refCols: Map[String, Long] = Map.empty): DataFrame = {
-    val eCol = (idExpr.cast(LongType) + lit(base)).as("e")
+    val e = idExpr.cast(LongType) + lit(base)
     // Columns named "__*" are ingest plumbing (e.g. a synthetic row id),
     // not attributes.
     val valuePieces = df.schema.fields.toSeq.filterNot(_.name.startsWith("__")).map { f =>
-      val (slot, tag) = slotFor(f.dataType)
-      val v = slot match {
-        case "vstr" => col(f.name).cast(StringType)
-        case "vlong" => col(f.name).cast(LongType)
-        case "vdbl" => col(f.name).cast(DoubleType)
-        case "vts" => col(f.name).cast(TimestampType)
-      }
-      df.select(Seq(eCol, lit(f.name).as("a"), lit(tag).as("vtype")) ++
-        nullCols(slot) :+ v.as(slot): _*)
+      val slot = slotFor(f.dataType)._1
+      facts(df, e, f.name, slot, col(f.name), lit(tx)).filter(col(slot).isNotNull)
     }
     val refPieces = refCols.toSeq.map { case (c, refBase) =>
-      df.select(Seq(eCol, lit(c + "_ref").as("a"), lit("r").as("vtype")) ++
-        nullCols("vref") :+ (col(c).cast(LongType) + lit(refBase)).as("vref"): _*)
+      facts(df, e, c + "_ref", "vref", col(c).cast(LongType) + lit(refBase), lit(tx))
+        .filter(col("vref").isNotNull)
     }
-    val ordered = (valuePieces ++ refPieces).map { p =>
-      p.select(col("e"), col("a"), col("vtype"),
-        col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"),
-        lit(tx).as("tx"), lit(true).as("added"))
-        .filter(col("vstr").isNotNull || col("vlong").isNotNull ||
-          col("vdbl").isNotNull || col("vts").isNotNull || col("vref").isNotNull)
-    }
-    ordered.reduce(_.unionAll(_))
+    (valuePieces ++ refPieces).reduce(_.unionAll(_))
   }
 
   /** Attribute -> value-slot map for a melted table. */
@@ -201,10 +204,8 @@ object FactStore {
             col("__pid").cast(StringType))))
       })
     val elemId = lit(elemBase + level * levelSpan) + col("__comp")
-    val refs = exploded.select(Seq(col("__pid").as("e"), lit(attr).as("a"),
-      lit("r").as("vtype")) ++ nullCols("vref") :+ elemId.as("vref"): _*)
-    val idxs = exploded.select(Seq(elemId.as("e"), lit(s"$attr/idx").as("a"),
-      lit("l").as("vtype")) ++ nullCols("vlong") :+ col("__idx").as("vlong"): _*)
+    val refs = facts(exploded, col("__pid"), attr, "vref", elemId, lit(tx))
+    val idxs = facts(exploded, elemId, s"$attr/idx", "vlong", col("__idx"), lit(tx))
     val vals = elemType match {
       case ArrayType(inner, _) =>
         // nested list: the element's VALUE is itself a list — recurse
@@ -213,16 +214,9 @@ object FactStore {
           exploded.select(elemId.as("__pid"), col("__comp"), col("__v").as("__list")),
           inner, s"$attr/val", elemBase, tx, stride, levelSpan, level + 1)
       case scalar =>
-        val (slot, tag) = slotFor(scalar)
-        exploded.select(Seq(elemId.as("e"), lit(s"$attr/val").as("a"),
-          lit(tag).as("vtype")) ++ nullCols(slot) :+
-            col("__v").cast(factSchema(slot).dataType).as(slot): _*)
+        facts(exploded, elemId, s"$attr/val", slotFor(scalar)._1, col("__v"), lit(tx))
     }
-    Seq(refs, idxs, vals).map(_.select(
-        col("e"), col("a"), col("vtype"),
-        col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"),
-        lit(tx).as("tx"), lit(true).as("added")))
-      .reduce(_.unionAll(_))
+    Seq(refs, idxs, vals).reduce(_.unionAll(_))
   }
 
   /** Melt an `array<struct>` column into ORDERED sub-entity facts —
@@ -260,24 +254,14 @@ object FactStore {
             lit(s"meltStructList($attr): list longer than stride=$stride on id "),
             col("__rawid").cast(StringType)))).as("__idx"),
         col("__v"))
-    val parentE = (col("__rawid") + lit(parentBase)).as("e")
     val elemId = lit(elemBase) + col("__rawid") * lit(stride) + col("__idx")
-    val refs = exploded.select(Seq(parentE, lit(attr).as("a"),
-      lit("r").as("vtype")) ++ nullCols("vref") :+ elemId.as("vref"): _*)
-    val idxs = exploded.select(Seq(elemId.as("e"), lit(s"$attr/idx").as("a"),
-      lit("l").as("vtype")) ++ nullCols("vlong") :+ col("__idx").as("vlong"): _*)
+    val refs = facts(exploded, col("__rawid") + lit(parentBase), attr, "vref", elemId, lit(tx))
+    val idxs = facts(exploded, elemId, s"$attr/idx", "vlong", col("__idx"), lit(tx))
     val fieldFacts = st.fields.toSeq.map { f =>
-      val (slot, tag) = slotFor(f.dataType)
-      exploded.filter(col("__v").getField(f.name).isNotNull)
-        .select(Seq(elemId.as("e"), lit(s"$attr/${f.name}").as("a"),
-          lit(tag).as("vtype")) ++ nullCols(slot) :+
-            col("__v").getField(f.name).cast(factSchema(slot).dataType).as(slot): _*)
+      facts(exploded.filter(col("__v").getField(f.name).isNotNull), elemId,
+        s"$attr/${f.name}", slotFor(f.dataType)._1, col("__v").getField(f.name), lit(tx))
     }
-    (Seq(refs, idxs) ++ fieldFacts).map(_.select(
-        col("e"), col("a"), col("vtype"),
-        col("vstr"), col("vlong"), col("vdbl"), col("vts"), col("vref"),
-        lit(tx).as("tx"), lit(true).as("added")))
-      .reduce(_.unionAll(_))
+    (Seq(refs, idxs) ++ fieldFacts).reduce(_.unionAll(_))
   }
 
   /** Attribute -> value-slot map for a [[meltStructList]]-encoded

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * [[Schema.History]] is the same derivation over a session's schema
   * ops held on the driver: a transactor records each schema op at
-  * commit and resolves them with [[Versions.live]], the resolver its
+  * commit and resolves them with [[Versions.snapshot]], the resolver its
   * delta index also uses, so resolving the set for a tx runs no Spark
   * job. `cardManyAttrs` stays the log-derived reference it must agree
   * with (SchemaHistorySpec).
@@ -49,7 +49,7 @@ object Schema {
     * retractions, each with its tx), held on the driver: a session
     * records its own ops at commit and reads a base log's once, at open.
     * [[History.cardMany]] resolves them through the one in-memory
-    * resolver, [[Versions.live]], under the rules [[cardManyAttrs]]
+    * resolver, [[Versions.snapshot]], under the rules [[cardManyAttrs]]
     * reads through `FactDb.snapshot`, so the set as of any tx costs no
     * Spark job. Ops are metadata-sized. */
   final case class History(ops: Versions) {
@@ -60,7 +60,7 @@ object Schema {
       * versioning flag is `versioned` (as `cardManyAttrs` reads them
       * from its `FactDb`). */
     def cardMany(asOfTx: Long, declared: Set[String], versioned: Boolean): Set[String] = {
-      val live = (if (versioned) ops.live(asOfTx, declared) else ops.visible(asOfTx)).toSeq
+      val live = ops.snapshot(asOfTx, declared, versioned).toSeq
       val many = live.collect {
         case r if Versions.attr(r) == CardinalityAttr && ManyValue == Versions.vstr(r) => r.getLong(0)
       }.toSet

@@ -154,29 +154,14 @@ object TestData {
 
   private def buildEventsDb(spark: SparkSession, dir: String): FactDb = {
     val ev = read(spark, dir, "events")
-      .select((col("user_id") + lit(UserBase)).as("e"),
-        (col("event_id") + lit(TxBase)).as("tx"),
-        col("event_type"), col("value"))
-    val lastValue = ev.select(col("e"), lit("last_value").as("a"), lit("d").as("vtype"),
-      lit(null).cast("string").as("vstr"), lit(null).cast("long").as("vlong"),
-      col("value").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-      lit(null).cast("long").as("vref"), col("tx"), lit(true).as("added"))
-    val lastType = ev.select(col("e"), lit("last_type").as("a"), lit("s").as("vtype"),
-      col("event_type").as("vstr"), lit(null).cast("long").as("vlong"),
-      lit(null).cast("double").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-      lit(null).cast("long").as("vref"), col("tx"), lit(true).as("added"))
-    val active = ev.filter(col("event_type").isin("signup", "error"))
-      .select(col("e"), lit("active").as("a"), lit("l").as("vtype"),
-        lit(null).cast("string").as("vstr"), lit(1L).as("vlong"),
-        lit(null).cast("double").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-        lit(null).cast("long").as("vref"), col("tx"),
-        (col("event_type") === "signup").as("added"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("e"), lit("purchase_bucket").as("a"), lit("l").as("vtype"),
-        lit(null).cast("string").as("vstr"), floor(col("value")).cast("long").as("vlong"),
-        lit(null).cast("double").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-        lit(null).cast("long").as("vref"), col("tx"), lit(true).as("added"))
-    FactDb(lastValue.unionAll(lastType).unionAll(active).unionAll(purchases),
+    val e = col("user_id") + lit(UserBase)
+    val tx = col("event_id") + lit(TxBase)
+    val active = FactStore.facts(ev.filter(col("event_type").isin("signup", "error")),
+      e, "active", "vlong", lit(1L), tx, added = col("event_type") === "signup")
+    val purchases = FactStore.facts(ev.filter(col("event_type") === "purchase"),
+      e, "purchase_bucket", "vlong", floor(col("value")), tx)
+    FactDb(graft.streaming.FactStream.eventFacts(ev, UserBase, TxBase)
+        .unionAll(active).unionAll(purchases),
       Map("last_value" -> "vdbl", "last_type" -> "vstr", "active" -> "vlong",
         "purchase_bucket" -> "vlong"),
       cardMany = Set("purchase_bucket"))

@@ -23,9 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    same-tx tie.
   * Value identity is Spark's: a window's partition keys go through
   * `NormalizeFloatingNumbers`, so NaN equals NaN and -0.0 equals 0.0,
-  * and doubles order as `SQLOrderingUtil.compareDoubles`. Both the
-  * schema record ([[Schema.History]]) and a session's delta
-  * ([[DriverDelta]]) resolve through it. */
+  * and doubles order as `SQLOrderingUtil.compareDoubles`. Its callers:
+  * a session's delta ([[DriverDelta]], on every driver-resolved read),
+  * the schema record ([[Schema.History]]) and the job-free entity read
+  * (`graft.sources.PointRead`); the last two go through [[snapshot]],
+  * which also covers an unversioned db. */
 final class Versions private (chains: HashMap[(Long, String), Vector[InternalRow]]) {
   import Versions._
 
@@ -38,6 +40,11 @@ final class Versions private (chains: HashMap[(Long, String), Vector[InternalRow
   /** Every op with tx <= `asOfTx`, unresolved. */
   def visible(asOfTx: Long): Iterator[InternalRow] =
     chains.valuesIterator.flatMap(_.iterator.filter(_.getLong(TxCol) <= asOfTx))
+
+  /** `FactDb.snapshot`'s rule on the driver: [[live]] for a versioned
+    * db, [[visible]] for an unversioned one. */
+  def snapshot(asOfTx: Long, cardMany: String => Boolean, versioned: Boolean): Iterator[InternalRow] =
+    if (versioned) live(asOfTx, cardMany) else visible(asOfTx)
 
   /** The live facts as of `asOfTx`; `cardMany` selects the attributes
     * that keep every live value. */

@@ -385,18 +385,9 @@ object Compiler {
     * component of the rule-reference graph. Size 1 = plain self- or
     * non-recursion (the common case). */
   private def ruleGroup(name: String, rules: Map[String, Seq[Rule]]): Set[String] = {
-    def deps(n: String): Set[String] =
-      rules.get(n).fold(Set.empty[String])(ds => ruleDeps(ds.map(_.body)))
-    def reach(start: String): Set[String] = {
-      var seen = Set(start); var frontier = Set(start)
-      while (frontier.nonEmpty) {
-        frontier = frontier.flatMap(deps) -- seen
-        seen ++= frontier
-      }
-      seen
-    }
-    val fwd = reach(name)
-    fwd.filter(m => reach(m).contains(name)) + name
+    def reach(n: String): Set[String] =
+      ruleDepsTransitive(rules.getOrElse(n, Nil).map(_.body), rules)
+    reach(name).filter(m => reach(m).contains(name)) + name
   }
 
   /** Materialize a rule as a relation over its head params. A
@@ -507,21 +498,22 @@ object Compiler {
         s"rule $n negates a member of its own recursion cycle " +
           s"(${group.mkString(", ")}): non-stratified negation is not supported")))
     val paramsOf = group.map(n => n -> rules(n).head.params.map(_.name)).toMap
+    val loop = s"rule ${group.mkString(",")}"
     // Materialize non-group sibling deps (e.g. the non-recursive
-    // `parent` inside `anc`'s body) ONCE before iterating: every round
-    // re-executes the recursive bodies, and an unmaterialized sibling
-    // would be recomputed from its base scans each time.
+    // `parent` inside `anc`'s body) ONCE before iterating, as part of
+    // the loop's seed: every round re-executes the recursive bodies, and
+    // an unmaterialized sibling would be recomputed from its base scans
+    // each time.
     group.foreach { n =>
       ruleDeps(rules(n).map(_.body)).diff(groupSet)
         .filter(m => rules.contains(m) && rules(m).exists(d => hasPattern(d.body)))
         .foreach { m =>
           val rel = cache.getOrElseUpdate(m, ruleRelation(db, m, rules, cache))
-          cache(m) = rel.localCheckpoint(eager = true)
+          cache(m) = Fixpoint.materialize(loop, rel).df
         }
     }
     def union(parts: Seq[DataFrame]): DataFrame =
       if (parts.size == 1) parts.head else parts.reduce(_ unionAll _).distinct()
-    val loop = s"rule ${group.mkString(",")}"
     // round 0: base definitions (no group references)
     val seeds = group.flatMap { n =>
       val bases = rules(n).filter(d => refs(d.body) == 0)

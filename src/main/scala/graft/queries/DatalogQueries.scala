@@ -309,10 +309,9 @@ object DatalogQueries {
       val se = 9100000001L
       val sf = s.createDataFrame(
         java.util.Arrays.asList(
-          org.apache.spark.sql.Row(se, Schema.SchemaAttr, "s",
-            "purchase_bucket", null, null, null, null, 0L, true),
-          org.apache.spark.sql.Row(se, Schema.CardinalityAttr, "s",
-            Schema.CardinalityMany, null, null, null, null, 0L, true)),
+          FactStore.factRow(se, Schema.SchemaAttr, "vstr", "purchase_bucket", 0L, added = true),
+          FactStore.factRow(se, Schema.CardinalityAttr, "vstr", Schema.CardinalityMany, 0L,
+            added = true)),
         FactStore.factSchema)
       val db = Schema.applySchema(
         base.copy(log = base.log.unionAll(sf), cardMany = Set.empty))

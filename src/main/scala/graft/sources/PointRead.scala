@@ -1,13 +1,16 @@
 package graft.sources
 
-import graft.core.FactDb
+import graft.core.{FactDb, FactStore, Versions}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -23,23 +26,19 @@ import scala.collection.mutable.ArrayBuffer
   * the catalog metadata, read it on the DRIVER through parquet-mr with
   * an `e = eid` predicate (row-group stats + dictionary + page filtering
   * apply — the layout sorts by `e`, so the reader seeks straight to the
-  * entity's pages), and run version resolution over the handful of
-  * surviving facts in plain Scala. No executor, no scheduler, no
-  * shuffle: milliseconds warm.
+  * entity's pages), and resolve the handful of surviving facts in
+  * memory. No executor, no scheduler, no shuffle: milliseconds warm.
   *
-  * Semantics are EXACTLY [[FactDb.entity]] (parity spec-pinned): same
-  * per-value liveness rule (newest tx wins, retraction wins a same-tx
-  * tie), same cardinality-one resolution (tx desc, then value columns
-  * desc nulls-last), same string rendering. Scale shape: reads ONE
-  * bucket file per attribute dir — O(live facts of one entity) work,
+  * Semantics are EXACTLY [[FactDb.entity]] (parity spec-pinned) and
+  * nothing here restates them: the facts become `factSchema` catalyst
+  * rows, `Versions.snapshot` resolves them under the rule
+  * `FactDb.snapshot` follows (graft's one in-memory version resolver),
+  * and each value renders through the `Cast(_, StringType)` that
+  * `entity` plans, under the session time zone. Scale shape: reads ONE
+  * bucket file per attribute dir — O(facts of one entity) work,
   * independent of corpus size; at 100 TB this is the difference between
   * an interactive entity inspector and a batch job per click. */
 object PointRead {
-
-  private case class Fact(a: String, vtype: String, vstr: String,
-                          vlong: java.lang.Long, vdbl: java.lang.Double,
-                          vtsMicros: java.lang.Long, vref: java.lang.Long,
-                          tx: Long, added: Boolean)
 
   /** Table layout resolved ONCE per (session, table): bucket count,
     * per-bucket file lists, a reusable Hadoop conf. The catalog lookup,
@@ -106,9 +105,7 @@ object PointRead {
     val conf = lay.conf
     val files = lay.byBucket(bucket)
 
-    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
-      java.util.TimeZone.getDefault.getID))
-    val facts = ArrayBuffer.empty[Fact]
+    val facts = ArrayBuffer.empty[InternalRow]
     val filter = FilterCompat.get(
       FilterApi.eq(FilterApi.longColumn("e"), java.lang.Long.valueOf(eid)))
     files.foreach { case (file, attrFromDir) =>
@@ -122,21 +119,30 @@ object PointRead {
           if (g.getLong("e", 0) == eid) {
             def has(f: String) =
               g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
-            def str(f: String) = if (has(f)) g.getString(f, 0) else null
-            def lng(f: String): java.lang.Long =
-              if (has(f)) java.lang.Long.valueOf(g.getLong(f, 0)) else null
-            def dbl(f: String): java.lang.Double =
-              if (has(f)) java.lang.Double.valueOf(g.getDouble(f, 0)) else null
-            facts += Fact(
-              attrFromDir.getOrElse(str("a")), str("vtype"), str("vstr"),
-              lng("vlong"), dbl("vdbl"), tsMicros(g), lng("vref"),
-              g.getLong("tx", 0), g.getBoolean("added", 0))
+            def str(f: String) = if (has(f)) UTF8String.fromString(g.getString(f, 0)) else null
+            def lng(f: String): Any = if (has(f)) g.getLong(f, 0) else null
+            facts += new GenericInternalRow(Array[Any](eid,
+              attrFromDir.map(UTF8String.fromString).getOrElse(str("a")), str("vtype"),
+              str("vstr"), lng("vlong"), if (has("vdbl")) g.getDouble("vdbl", 0) else null,
+              tsMicros(g), lng("vref"), g.getLong("tx", 0), g.getBoolean("added", 0)))
           }
           g = reader.read()
         }
       } finally reader.close()
     }
-    resolve(facts.toSeq, db, asOfTx).map(render(_, zone))
+    // entity()'s value column: the tag's slot cast to a string (an
+    // unknown tag reads vref, as entity's `otherwise` does)
+    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val rendered = FactStore.Slots.map { case (slot, tag) =>
+      val i = FactStore.factSchema.fieldIndex(slot)
+      tag -> Cast(BoundReference(i, FactStore.factSchema(i).dataType, nullable = true),
+        StringType, zone)
+    }.toMap
+    (Versions.empty ++ facts).snapshot(asOfTx, db.cardMany, db.versioned).map { r =>
+      val vtype = r.getUTF8String(2).toString
+      (r.getUTF8String(1).toString, vtype,
+        Option(rendered.getOrElse(vtype, rendered("r")).eval(r)).map(_.toString).orNull)
+    }.toSeq
   }
 
   /** Spark's bucket function: pmod(Murmur3Hash(e, seed=42), n) —
@@ -149,7 +155,7 @@ object PointRead {
 
   /** vts arrives as INT64 micros or Spark's default INT96
     * (julian day + nanos-of-day) depending on the writer config. */
-  private def tsMicros(g: org.apache.parquet.example.data.Group): java.lang.Long = {
+  private def tsMicros(g: org.apache.parquet.example.data.Group): Any = {
     if (!g.getType.containsField("vts") || g.getFieldRepetitionCount("vts") == 0)
       return null
     g.getType.getType("vts").asPrimitiveType().getPrimitiveTypeName.name() match {
@@ -158,95 +164,8 @@ object PointRead {
         val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
         val nanosOfDay = buf.getLong
         val julianDay = buf.getInt
-        java.lang.Long.valueOf(
-          (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L)
-      case _ => java.lang.Long.valueOf(g.getLong("vts", 0))
+        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
+      case _ => g.getLong("vts", 0)
     }
-  }
-
-  /** [[FactDb.snapshot]] + [[FactDb.entity]] semantics over an
-    * in-memory fact list: per-value liveness (tx desc, retraction wins
-    * the same-tx tie), then cardinality-one newest-per-attribute with
-    * the same value-column desc-nulls-last tie-break. */
-  private def resolve(all: Seq[Fact], db: FactDb, asOfTx: Long): Seq[Fact] = {
-    val bounded = all.filter(_.tx <= asOfTx)
-    if (!db.versioned) return bounded
-    val live = bounded
-      .groupBy(f => (f.a, f.vtype, f.vstr, f.vlong, f.vdbl, f.vtsMicros, f.vref))
-      .values.map { versions =>
-        // orderBy(tx desc, added asc): among the newest tx a retraction
-        // (added=false) outranks the assertion
-        versions.minBy(f => (-f.tx, f.added))
-      }
-      .filter(_.added).toSeq
-    val (one, many) = live.partition(f => !db.cardMany(f.a))
-    val resolvedOne = one.groupBy(_.a).values.map(_.min(cardOneOrder)).toSeq
-    resolvedOne ++ many
-  }
-
-  /** Mirror of resolveCardOne's window order: tx desc, then each value
-    * slot desc with nulls last. min() under this ordering = row_number 1.
-    * Strings compare as UTF-8 BYTES (Spark's UTF8String binary order),
-    * not Java UTF-16 code units — the two disagree for
-    * supplementary-plane characters, which would flip a same-tx
-    * card-one tie against entity(). */
-  private val utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      val n = math.min(x.length, y.length)
-      while (i < n) {
-        val c = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      java.lang.Integer.compare(x.length, y.length)
-    }
-  }
-  private val cardOneOrder: Ordering[Fact] = new Ordering[Fact] {
-    private def descNullsLast[T](x: T, y: T)(implicit ord: Ordering[T]): Int =
-      (x == null, y == null) match {
-        case (true, true) => 0
-        case (true, false) => 1   // null sorts AFTER any value
-        case (false, true) => -1
-        case (false, false) => ord.compare(y, x) // desc
-      }
-    def compare(a: Fact, b: Fact): Int = {
-      var c = java.lang.Long.compare(b.tx, a.tx) // tx desc
-      if (c != 0) return c
-      c = descNullsLast(a.vstr, b.vstr)(utf8Order); if (c != 0) return c
-      c = descNullsLast(a.vlong, b.vlong)(Ordering.by((l: java.lang.Long) => l.longValue))
-      if (c != 0) return c
-      c = descNullsLast(a.vdbl, b.vdbl)(Ordering.by((d: java.lang.Double) => d.doubleValue))
-      if (c != 0) return c
-      c = descNullsLast(a.vtsMicros, b.vtsMicros)(Ordering.by((l: java.lang.Long) => l.longValue))
-      if (c != 0) return c
-      descNullsLast(a.vref, b.vref)(Ordering.by((l: java.lang.Long) => l.longValue))
-    }
-  }
-
-  /** The same one-string-column rendering as [[FactDb.entity]]. */
-  private def render(f: Fact, zone: java.time.ZoneId): (String, String, String) = {
-    val v = f.vtype match {
-      case "s" => f.vstr
-      case "l" => if (f.vlong == null) null else f.vlong.toString
-      case "d" => if (f.vdbl == null) null else f.vdbl.toString
-      case "t" =>
-        if (f.vtsMicros == null) null
-        else { // Spark cast(timestamp as string): session TZ, fraction trimmed
-          val micros = f.vtsMicros.longValue
-          val secs = Math.floorDiv(micros, 1000000L)
-          val frac = Math.floorMod(micros, 1000000L)
-          val base = java.time.LocalDateTime.ofInstant(
-            java.time.Instant.ofEpochSecond(secs), zone)
-            .format(java.time.format.DateTimeFormatter
-              .ofPattern("uuuu-MM-dd HH:mm:ss"))
-          if (frac == 0) base
-          else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
-        }
-      case _ => if (f.vref == null) null else f.vref.toString
-    }
-    (f.a, f.vtype, v)
   }
 }

@@ -52,17 +52,10 @@ object FactStream {
     * cardinality-one `last_value`/`last_type`, tx = event_id. Works
     * identically on batch frames (Structured Streaming's contract). */
   def eventFacts(events: DataFrame, userBase: Long, txBase: Long): DataFrame = {
-    val e = (col("user_id") + lit(userBase)).as("e")
-    val tx = (col("event_id") + lit(txBase)).as("tx")
-    val lastValue = events.select(e, lit("last_value").as("a"), lit("d").as("vtype"),
-      lit(null).cast("string").as("vstr"), lit(null).cast("long").as("vlong"),
-      col("value").cast("double").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-      lit(null).cast("long").as("vref"), tx, lit(true).as("added"))
-    val lastType = events.select(e, lit("last_type").as("a"), lit("s").as("vtype"),
-      col("event_type").cast("string").as("vstr"), lit(null).cast("long").as("vlong"),
-      lit(null).cast("double").as("vdbl"), lit(null).cast("timestamp").as("vts"),
-      lit(null).cast("long").as("vref"), tx, lit(true).as("added"))
-    lastValue.unionAll(lastType)
+    val e = col("user_id") + lit(userBase)
+    val tx = col("event_id") + lit(txBase)
+    FactStore.facts(events, e, "last_value", "vdbl", col("value"), tx)
+      .unionAll(FactStore.facts(events, e, "last_type", "vstr", col("event_type"), tx))
   }
 
   /** Watermarked sliding-window counts per event_type — the streaming

@@ -24,12 +24,8 @@ object BetweennessScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 100000L
     val nPivots = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.SparkEntry.localSession(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     implicit val sp: SparkSession = spark
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.{Similarity, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for [[Similarity.bitextMine]]'s two paths (SCALE_r13):
@@ -23,12 +22,8 @@ object BitextScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mode = if (args.length > 1) args(1) else "bucketed"
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.SparkEntry.localSession(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val d = spark.read.parquet(s"$dir/documents.parquet")

@@ -13,11 +13,7 @@ object ClosureProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 2000
     val dn = if (args.length > 1) args(1).toInt else 5
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = graft.SparkEntry.localSession(8, 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     // many parallel short chains: closure is wide but the fixpoint is

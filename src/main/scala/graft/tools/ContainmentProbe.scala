@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** TEMPLATED-corpus probe for [[Dedup.shingleContainment]]'s
@@ -28,12 +27,8 @@ object ContainmentProbe {
     val copies = if (args.length > 1) args(1).toInt else 10
     val frac = if (args.length > 2) args(2).toDouble else 0.3
     val maxDf = if (args.length > 3) args(3).toInt else 256
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.SparkEntry.localSession(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = spark.read.parquet(s"$docsDir/documents.parquet")

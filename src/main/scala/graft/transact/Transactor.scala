@@ -3,7 +3,7 @@ package graft.transact
 import scala.collection.immutable.TreeMap
 
 import graft.core.{DriverDelta, FactDb, FactStore, Schema, Versions}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.Bridge
@@ -235,13 +235,16 @@ object Transactor {
     /** Marker for a reference-to-entity value (temp id or resolved). */
     case class EntityRef(id: Any)
 
-    /** The value slot a transacted value lands in. */
-    private def slotOf(v: Any): String = v match {
-      case EntityRef(_) => "vref"
-      case _: String => "vstr"
-      case _: Long | _: Int | _: Boolean => "vlong"
-      case _: Double => "vdbl"
-      case _: java.sql.Timestamp => "vts"
+    /** A transacted value as its fact encoding: the value slot it
+      * lands in and its value there. */
+    private def encode(v: Any): (String, Any) = v match {
+      case EntityRef(id) => ("vref", id)
+      case s: String => ("vstr", s)
+      case l: Long => ("vlong", l)
+      case i: Int => ("vlong", i.toLong)
+      case b: Boolean => ("vlong", if (b) 1L else 0L)
+      case d: Double => ("vdbl", d)
+      case t: java.sql.Timestamp => ("vts", t)
       case other => throw new IllegalArgumentException(s"unsupported value $other")
     }
 
@@ -279,20 +282,10 @@ object Transactor {
         case Retract(e, a, v) => (resolveE(e), a, v, txId, false)
         case m: MapForm => throw new IllegalStateException(s"unexpanded $m")
       }
-      val rows = facts.map { case (e, a, v, tx, added) =>
-        val (vtype, vstr, vlong, vdbl, vts, vref) = v match {
-          case EntityRef(id: Long) => ("r", null, null, null, null, java.lang.Long.valueOf(id))
-          case s: String => ("s", s, null, null, null, null)
-          case l: Long => ("l", null, java.lang.Long.valueOf(l), null, null, null)
-          case i: Int => ("l", null, java.lang.Long.valueOf(i.toLong), null, null, null)
-          case d: Double => ("d", null, null, java.lang.Double.valueOf(d), null, null)
-          case t: java.sql.Timestamp => ("t", null, null, null, t, null)
-          case b: Boolean => ("l", null, java.lang.Long.valueOf(if (b) 1L else 0L), null, null, null)
-          case other => throw new IllegalArgumentException(s"unsupported value $other")
-        }
-        Row(e, a, vtype, vstr, vlong, vdbl, vts, vref, tx, added)
+      val converted = facts.map { case (e, a, v, tx, added) =>
+        val (slot, value) = encode(v)
+        toRow(FactStore.factRow(e, a, slot, value, tx, added))
       }
-      val converted = rows.map(toRow)
       val delta = prior.delta ++ converted
       val ops = prior.ops ++ converted
       val baseTouchedTx = prior.baseTouchedTx
@@ -320,8 +313,8 @@ object Transactor {
       * transaction loudly instead. */
     private def checkSlots(stmts: Seq[TxStmt], registered: Map[String, String]): Map[String, String] = {
       val typesSeq = stmts.map {
-        case Add(_, a, v) => a -> slotOf(v)
-        case Retract(_, a, v) => a -> slotOf(v)
+        case Add(_, a, v) => a -> encode(v)._1
+        case Retract(_, a, v) => a -> encode(v)._1
         case m: MapForm => throw new IllegalStateException(s"unexpanded $m")
       }
       typesSeq.groupBy(_._1).foreach { case (a, slots) =>

@@ -81,6 +81,22 @@ class FixpointSpec extends SparkSpec {
     // the query's own action runs under the caller's description
     assert(rule.last === "caller")
 
+    // a non-recursive sibling the loop reads (`par`) is materialised once,
+    // as part of the loop's seed, not under the caller's description
+    val viaSibling = Seq(
+      Rule("par", Seq(V("x"), V("y")), Pattern(V("x"), C("parent"), V("y"))),
+      Rule("anc", Seq(V("x"), V("y")), RuleApp("par", V("x"), V("y"))),
+      Rule("anc", Seq(V("x"), V("y")), And(
+        RuleApp("par", V("x"), V("m")), RuleApp("anc", V("m"), V("y")))))
+    val sibling = asCaller {
+      rows = Compiler.run(db, Query(find = Seq(FVar(V("a"), "a"), FVar(V("b"), "b")),
+        where = RuleApp("anc", V("a"), V("b")), rules = viaSibling)).count()
+    }
+    assert(rows === 6)
+    assert(sibling.filter(_.startsWith("graft:")).distinct ===
+      (0 to 3).map(i => s"graft:rule anc round $i"), sibling)
+    assert(sibling.count(_ == "caller") === rule.count(_ == "caller"), sibling)
+
     val reach = asCaller {
       rows = GraphOps.bfs(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), Seq(1L), maxHops = 5)
         .count()

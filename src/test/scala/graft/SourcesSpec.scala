@@ -308,6 +308,61 @@ class SourcesSpec extends SparkSpec {
     val jobMs = (System.nanoTime() - t1) / 1e6
     assert(directMs < jobMs,
       s"warm entityDirect ($directMs ms) should beat the Spark job ($jobMs ms)")
+
+    // more inputs, on both layouts (bucketed, bucketed + attr-partitioned)
+    locally {
+      import graft.core.{FactDb, FactStore}
+      def fact(e: Long, a: String, slot: String, v: Any, tx: Long, added: Boolean = true) =
+        FactStore.factRow(e, a, slot, v, tx, added)
+      def ts(s: String) = java.sql.Timestamp.valueOf(s)
+      // shapes a resolver or renderer can get wrong: a NaN assert/retract
+      // pair (under Scala `==` the NaN would stay live), same-tx card-one
+      // ties (UTF-8 byte order: U+1F600 sorts above U+FFFD, UTF-16 puts
+      // it below), timestamps with fractional seconds, and the same log
+      // read as an unversioned db
+      val rows = Seq(
+        fact(1L, "score", "vdbl", Double.NaN, 1L),
+        fact(1L, "score", "vdbl", Double.NaN, 2L, added = false),
+        fact(2L, "name", "vstr", "alpha", 1L),
+        fact(2L, "name", "vstr", "beta", 1L),
+        fact(2L, "nick", "vstr", "\uFFFD", 1L),
+        fact(2L, "nick", "vstr", "\uD83D\uDE00", 1L),
+        fact(2L, "tag", "vstr", "x", 1L),
+        fact(2L, "tag", "vstr", "y", 2L),
+        fact(2L, "size", "vlong", 3L, 1L),
+        fact(2L, "size", "vlong", 7L, 1L),
+        fact(3L, "at", "vts", ts("2024-01-02 03:04:05.1234"), 1L),
+        fact(3L, "at", "vts", ts("2024-05-06 07:08:09.5"), 2L),
+        fact(3L, "seen", "vts", ts("2024-05-06 07:08:09.000001"), 1L),
+        fact(3L, "seen", "vts", ts("2024-05-06 07:08:09.00001"), 1L),
+        fact(3L, "peer", "vref", 2L, 1L))
+      val mixed = FactDb(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), FactStore.factSchema),
+        Map("score" -> "vdbl", "name" -> "vstr", "nick" -> "vstr", "tag" -> "vstr",
+          "size" -> "vlong", "at" -> "vts", "seen" -> "vts", "peer" -> "vref"),
+        cardMany = Set("tag"))
+      Seq(false, true).foreach { byAttr =>
+        val table = s"graft_pointread_inputs_${if (byAttr) "attr" else "flat"}"
+        graft.sources.Catalog.recreate(spark, table) {
+          FactLogIO.writeBucketedTable(mixed, table, buckets = 2, partitionByAttr = byAttr)
+        }
+        val log = spark.table(table).select(FactStore.factSchema.fields.toIndexedSeq
+          .map(f => col(f.name).cast(f.dataType)): _*)
+        Seq(mixed, mixed.copy(versioned = false)).foreach { d =>
+          for (eid <- 1L to 3L; asOf <- Seq(1L, 2L)) {
+            val direct = PointRead.entityDirect(spark, table, d, eid, asOf)
+            val viaSpark = d.copy(log = log).entity(eid, asOf).collect()
+              .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+            assert(direct.sorted === viaSpark.sorted,
+              s"entity $eid as of $asOf diverged (byAttr=$byAttr, versioned=${d.versioned})")
+          }
+        }
+        // the inputs hold what they are meant to: the NaN is live, then gone
+        assert(PointRead.entityDirect(spark, table, mixed, 1L).isEmpty)
+        assert(PointRead.entityDirect(spark, table, mixed, 1L, 1L) === Seq(("score", "d", "NaN")))
+        assert(PointRead.entityDirect(spark, table, mixed, 3L).map(_._3).exists(_.endsWith(".5")))
+      }
+    }
   }
 
   test("point read: attr-partitioned layout with melted (slash-containing) attributes") {
