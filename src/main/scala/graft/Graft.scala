@@ -4,6 +4,7 @@ import graft.core.FactDb
 import graft.datalog.{Compiler, Pull, Query}
 import graft.transact.Transactor
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.LocalBroadcast
 
 /** User-facing façade — the connection-level API a unifyDB user maps
   * onto directly (reference surface: transact / query / pull / as-of,
@@ -18,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * conn.historical.query(Query(...))       // every fact version
   * conn.pull(idsDf, Pull.Spec(...))        // nested entity retrieval
   * }}}
+  *
+  * Opening a connection registers `LocalBroadcast` on the session, so a
+  * join against driver-held rows (the transacted delta, a small
+  * fixpoint round) broadcasts them without a Spark job.
   */
 final class Graft private (val session: Transactor.Session,
                            asOfTx: Long = Long.MaxValue,
@@ -76,8 +81,10 @@ object Graft {
   /** Fresh empty database. `clock` feeds each tx's txInstant (inject a
     * fake for deterministic tests). */
   def open(spark: SparkSession,
-           clock: () => Long = () => System.currentTimeMillis()): Graft =
+           clock: () => Long = () => System.currentTimeMillis()): Graft = {
+    LocalBroadcast.setup(spark)
     new Graft(Transactor.emptySession(spark, clock = clock))
+  }
 
   /** Over an existing fact db (e.g. bulk-melted tables or
     * sources.FactLogIO.read). `firstTx`/`firstEntityId` must be above
@@ -86,6 +93,8 @@ object Graft {
     * entities makes reads as of it or later resolve the whole log with
     * `FactDb.snapshot`'s windows (see `Transactor`). */
   def over(spark: SparkSession, db: FactDb, firstTx: Long,
-           firstEntityId: Long): Graft =
+           firstEntityId: Long): Graft = {
+    LocalBroadcast.setup(spark)
     new Graft(Transactor.session(spark, db, firstTx, firstEntityId))
+  }
 }

@@ -9,16 +9,22 @@ import org.apache.spark.sql.graft.Bridge
   * cc, k-core, scc, label propagation, the betweenness forward pass)
   * and `Dedup.dedupStrict`. The rule they all follow is stated here
   * once:
-  *  - ONE materialising job per round. The round's frame is
-  *    localCheckpointed and counted by the same job
-  *    ([[Bridge.localCheckpointCount]]); the count is the loop's
-  *    progress test, so no round pays a second `count`/`isEmpty` job,
-  *    and the checkpoint keeps every later round's lineage flat.
+  *  - ONE materialising job per round, and one size rule for where
+  *    the round lives ([[Bridge.localCheckpointCount]]). The job
+  *    checkpoints and counts the round's frame; a round of at most
+  *    [[Bridge.FoldRows]] rows comes back as a local relation on the
+  *    driver (its checkpoint freed), a larger one as the checkpoint.
+  *    The count is the loop's progress test, so no round pays a second
+  *    `count`/`isEmpty` job, and either form keeps every later round's
+  *    lineage flat. In a session `LocalBroadcast` is set up on (every
+  *    Datalog query's), a local round also broadcasts without a job.
   *  - State a round supersedes is released once its successor has
   *    materialised: the replaced state of [[iterate]]/[[replace]], and
-  *    the empty last delta of [[semiNaive]]. A semi-naive total is a
-  *    union tree of its deltas, never re-materialised, so a round
-  *    writes only its delta.
+  *    the empty last delta of [[semiNaive]]. A semi-naive total is
+  *    never re-materialised, so a round writes only its delta: the
+  *    total is one local relation while its deltas are local and
+  *    together within `FoldRows` rows ([[total]]), else a union tree of
+  *    its deltas.
   *  - A loop that must converge and has not after `maxRounds` raises
   *    [[NotConverged]]. A loop whose round count is part of its result's
   *    definition (bfs hops, label-propagation rounds) passes
@@ -98,7 +104,7 @@ object Fixpoint {
     var i = 0
     while (deltas.nonEmpty && i < maxRounds) {
       i += 1
-      val totals = parts.map { case (k, ps) => k -> ps.reduce(_ unionAll _) }
+      val totals = parts.map { case (k, ps) => k -> total(ps) }
       val rounds = labelled(deltas.head._2, loop, i) {
         step(deltas, totals).map { case (k, df) => k -> checkpoint(df) }
       }
@@ -108,6 +114,17 @@ object Fixpoint {
     }
     if (deltas.nonEmpty && !budget) throw new NotConverged(loop, maxRounds)
     parts
+  }
+
+  /** The relation a semi-naive loop's parts add up to: one local
+    * relation when every part is local and their rows fit within
+    * [[Bridge.FoldRows]], else their union. */
+  def total(parts: Seq[DataFrame]): DataFrame = {
+    val union = parts.reduce(_ unionAll _)
+    val local = parts.map(Bridge.localRows)
+    if (parts.size > 1 && local.forall(_.isDefined) && local.map(_.get.size).sum <= Bridge.FoldRows)
+      Bridge.rowsFrame(union.sparkSession, union.schema, local.flatMap(_.get))
+    else union
   }
 
   private def checkpoint(df: DataFrame): Round = {

@@ -120,7 +120,7 @@ object Versions {
   * reads of one committed state carry the same handle (and stay equal
   * fixpoint-cache keys). */
 final class DriverDelta(val log: DataFrame, val base: DataFrame, val baseVersioned: Boolean,
-                        ops: Versions, baseTouchedTx: Option[Long], localMaxRows: Int) {
+                        ops: Versions, baseTouchedTx: Option[Long]) {
 
   /** The delta's live facts as of `asOfTx` under the read's own
     * cardinality-many set, as one leaf (`Bridge.rowsFrame`), or None
@@ -128,5 +128,5 @@ final class DriverDelta(val log: DataFrame, val base: DataFrame, val baseVersion
   def resolved(asOfTx: Long, cardMany: Set[String]): Option[DataFrame] =
     if (baseTouchedTx.exists(_ <= asOfTx)) None
     else Some(Bridge.rowsFrame(log.sparkSession, FactStore.factSchema,
-      ops.live(asOfTx, cardMany).toVector, localMaxRows))
+      ops.live(asOfTx, cardMany).toVector))
 }

@@ -3,6 +3,7 @@ package graft.datalog
 import graft.core.{FactDb, Fixpoint}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalBroadcast
 import org.apache.spark.sql.types._
 
 /** Datalog → DataFrame compiler.
@@ -32,6 +33,7 @@ object Compiler {
   }
 
   def run(db: Db, q: Query)(implicit spark: SparkSession): DataFrame = {
+    LocalBroadcast.setup(spark)
     val rules = q.rules.groupBy(_.name)
     val ruleCache = collection.mutable.Map.empty[String, DataFrame]
     val initFrames: Option[DataFrame] =
@@ -235,19 +237,26 @@ object Compiler {
       val defs = rules(name)
       val params = defs.head.params
       require(params.length == args.length, s"rule $name arity mismatch")
-      // Bind call args to the head params of the materialized relation.
+      // Bind call args to the head params of the materialized relation:
+      // a constant filters its param, a variable names its first param
+      // and equates every later one with it.
       var out = rel
       var filters = List.empty[Column]
-      val renames = collection.mutable.Map.empty[String, String]
+      val firstParam = collection.mutable.LinkedHashMap.empty[String, String]
       params.zip(args).foreach {
         case (p, C(value)) => filters ::= col(p.name) === lit(value)
-        case (p, V(n)) =>
-          if (renames.contains(p.name)) filters ::= col(p.name) === col(renames(p.name))
-          else renames(p.name) = n
+        case (p, V(n)) => firstParam.get(n) match {
+          case Some(q) => filters ::= col(p.name) === col(q)
+          case None => firstParam(n) = p.name
+        }
         case (_, W) => ()
       }
       filters.foreach(f => out = out.filter(f))
-      val selected = out.select(renames.map { case (p, n) => col(p).as(n) }.toSeq: _*).distinct()
+      // a rule relation is a set, and so is its projection onto every
+      // argument that is not `_`: constants and repeated variables only
+      // filter it. Only a wildcard drops a column that told rows apart.
+      val projected = out.select(firstParam.map { case (n, p) => col(p).as(n) }.toSeq: _*)
+      val selected = if (args.contains(W)) projected.distinct() else projected
       Some(merge(frames, selected))
   }
 
@@ -406,8 +415,8 @@ object Compiler {
     if (group.size == 1 && !ruleDeps(defs.map(_.body)).contains(name))
       return defs.map(evalBound(db, name, _, rules, cache, Map.empty))
         .reduce(_ unionAll _).distinct()
-    // A fixpoint's result is a union of checkpointed deltas — already
-    // materialized, so it is safely shareable ACROSS queries in the
+    // A fixpoint's result is made of materialized deltas (driver-held
+    // or checkpointed), so it is safely shareable ACROSS queries in the
     // session. Key: db identity (fact logs are session-cached objects),
     // the group and member, and the full definition set of the group +
     // its TRANSITIVE dependencies (structural equality on the AST) — a
@@ -546,7 +555,7 @@ object Compiler {
       }.toMap
     }
     group.map { n =>
-      n -> parts.get(n).map(_.reduce(_ unionAll _)).getOrElse(throw new IllegalArgumentException(
+      n -> parts.get(n).map(Fixpoint.total).getOrElse(throw new IllegalArgumentException(
         s"rule $n derives no tuples: in a recursion group every member " +
           "must be reachable from some base case"))
     }.toMap
@@ -596,13 +605,14 @@ object Compiler {
         .flatMap(_.getValue._2).toSet
     }
 
-  /** Fault tolerance for cache reuse: cached fixpoints are
-    * localCheckpoint-backed — lineage is truncated, so blocks lost to
-    * an executor failure CANNOT be recomputed, and without this check
-    * every later query reusing the entry would fail until LRU
-    * eviction. Validate the entry's checkpoint RDDs still have every
-    * partition's block (driver-side storage metadata — no job); a
-    * stale entry rebuilds and re-puts. */
+  /** Fault tolerance for cache reuse: a cached fixpoint past
+    * `Bridge.FoldRows` rows reads localCheckpoint blocks — lineage is
+    * truncated, so blocks lost to an executor failure CANNOT be
+    * recomputed, and without this check every later query reusing the
+    * entry would fail until LRU eviction. Validate the entry's
+    * checkpoint RDDs still have every partition's block (driver-side
+    * storage metadata — no job); a stale entry rebuilds and re-puts.
+    * A driver-held entry has no blocks to lose and is always healthy. */
   private def blocksHealthy(spark: SparkSession, rddIds: Seq[Int]): Boolean = {
     lazy val info = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i).toMap
     rddIds.forall(id => info.get(id).exists(i =>

@@ -3,6 +3,7 @@ package graft.datalog
 import graft.core.FactDb
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalBroadcast
 
 /** Pull expressions — nested entity retrieval, the Spark re-expression
   * of /root/reference/src/unifydb/query/pull.clj.
@@ -36,8 +37,10 @@ object Pull {
     * in spec order (attrs, then refs), arrays of structs for
     * cardinality-many ref attrs. */
   def pullNested(db: FactDb, ids: DataFrame, spec: Spec,
-                 asOfTx: Long = Long.MaxValue): DataFrame =
+                 asOfTx: Long = Long.MaxValue): DataFrame = {
+    LocalBroadcast.setup(ids.sparkSession)
     nested(db, db.snapshot(asOfTx), ids, spec)
+  }
 
   /** [[pullNested]] over `snap`, a snapshot of `db` that several pulls
     * share. An id with no facts gets a struct of nulls. */

@@ -31,8 +31,8 @@ import org.apache.spark.sql.graft.Bridge
   *  - a commit costs O(transaction) and runs no Spark job. Facts are
   *    converted once to catalyst rows and appended to ONE driver-side
   *    delta buffer; the session's log is its base log unioned with a
-  *    single leaf over that buffer — a local relation up to `FoldRows`
-  *    rows, past it one parallelized RDD of at most
+  *    single leaf over that buffer — a local relation up to
+  *    `Bridge.FoldRows` rows, past it one parallelized RDD of at most
   *    `defaultParallelism` partitions — so log partitions and plan
   *    leaves stay constant however many transactions ran. That log is
   *    what `historical` reads.
@@ -120,19 +120,6 @@ object Transactor {
         case other => Seq(other)
       }
   }
-
-  /** Delta rows a session's log reads through a local relation; past
-    * this the delta is folded into one parallelized RDD (a local
-    * relation's rows are copied, hashed and constant-folded by Catalyst
-    * on the driver each time a plan over it is built). Measured on a
-    * 4-vCPU VM at `local[4]`, median of 8 warm reads over a delta of n
-    * 10-attribute facts, local relation vs folded RDD: a one-pattern
-    * read and a two-pattern join are level up to n = 16384 (within
-    * ±25 % run to run), then the local relation falls behind: 289 vs
-    * 190 ms and 481 vs 315 ms at n = 65536, 761 vs 328 ms and 1623 vs
-    * 521 ms at n = 262144. Folding at 4096 costs nothing measurable
-    * and keeps a long session off that curve. */
-  private[graft] val FoldRows = 4096
 
   /** What a session has committed, published whole at each commit.
     * `delta` holds every transacted fact as a converted catalyst row and
@@ -290,10 +277,10 @@ object Transactor {
       val ops = prior.ops ++ converted
       val baseTouchedTx = prior.baseTouchedTx
         .orElse(Option.when(facts.exists(_._1 < firstEntityId))(txId))
-      val log = base.log.unionAll(Bridge.rowsFrame(spark, FactStore.factSchema, delta, FoldRows))
+      val log = base.log.unionAll(Bridge.rowsFrame(spark, FactStore.factSchema, delta))
       committed = Committed(
         FactDb(log, prior.db.attrTypes ++ types, prior.db.cardMany, versioned = true,
-          delta = Some(new DriverDelta(log, base.log, base.versioned, ops, baseTouchedTx, FoldRows))),
+          delta = Some(new DriverDelta(log, base.log, base.versioned, ops, baseTouchedTx))),
         delta, ops,
         prior.schema ++ converted.filter(r => Schema.Attrs.contains(r.getUTF8String(1).toString)),
         prior.instants ++ converted,
@@ -337,7 +324,7 @@ object Transactor {
                    clock: () => Long = () => System.currentTimeMillis()): Session = {
     // an empty local relation: the optimizer drops it from the union
     // with the delta, so an empty session's log is the delta alone
-    val empty = Bridge.rowsFrame(spark, FactStore.factSchema, Vector.empty, FoldRows)
+    val empty = Bridge.rowsFrame(spark, FactStore.factSchema, Vector.empty)
     new Session(spark, FactDb(empty, Map.empty), firstTx, firstEntityId, clock)
   }
 

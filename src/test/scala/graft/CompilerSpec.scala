@@ -147,12 +147,14 @@ class CompilerSpec extends SparkSpec {
     assert(out.count() === 6) // 1->2,3,4; 2->3,4; 3->4
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
+  /** Job descriptions of the jobs `body` launches. */
+  private def jobsIn(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
+        seen.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("")): Unit
     }
     spark.sparkContext.addSparkListener(listener)
     // drain the async listener bus: poll until the count is stable
@@ -162,11 +164,14 @@ class CompilerSpec extends SparkSpec {
       var last = -1; var stable = 0; var waited = 0
       while (stable < 4 && waited < 15000) {
         Thread.sleep(250); waited += 250
-        if (n.get() == last) stable += 1 else { stable = 0; last = n.get() }
+        if (seen.size == last) stable += 1 else { stable = 0; last = seen.size }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
   }
+
+  private def jobsDuring(body: => Unit): Int = jobsIn(body).size
 
   test("recursive rule relation is shared across queries: no fixpoint jobs on reuse") {
     val chain = mkDb(Seq(
@@ -199,35 +204,72 @@ class CompilerSpec extends SparkSpec {
     assert(second <= 3, s"expected no fixpoint jobs on reuse, got $second")
   }
 
+  private val ancRules = Seq(
+    Rule("anc", Seq(V("x"), V("y")), Pattern(V("x"), C("parent"), V("y"))),
+    Rule("anc", Seq(V("x"), V("y")), And(
+      Pattern(V("x"), C("parent"), V("m")),
+      RuleApp("anc", V("m"), V("y")))))
+
+  private def ancestors(db: Db) = Compiler.run(db, Query(
+    find = Seq(FVar(V("a"), "a"), FVar(V("b"), "b")),
+    where = RuleApp("anc", V("a"), V("b")),
+    rules = ancRules))
+
+  /** Drop every persisted block behind the fixpoint cache's back: the
+    * local-mode stand-in for losing the executor that held them. */
+  private def loseBlocks(): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
   test("fixpoint cache recovers when its checkpointed blocks vanish (fault tolerance)") {
+    // a 3-hop chain: every round is within FoldRows, so the cached
+    // relation is driver-held and has no blocks to lose
     val chain = mkDb(Seq(
       r(40, "parent", 41), r(41, "parent", 42), r(42, "parent", 43)),
       Map("parent" -> "vref"))
-    val ancRules = Seq(
-      Rule("anc", Seq(V("x"), V("y")), Pattern(V("x"), C("parent"), V("y"))),
-      Rule("anc", Seq(V("x"), V("y")), And(
-        Pattern(V("x"), C("parent"), V("m")),
-        RuleApp("anc", V("m"), V("y")))))
-    def run() = Compiler.run(chain, Query(
-      find = Seq(FVar(V("a"), "a"), FVar(V("b"), "b")),
-      where = RuleApp("anc", V("a"), V("b")),
-      rules = ancRules))
-    // populates the fixpoint cache
-    val cold = jobsDuring { assert(run().count() === 6) }
-    // Kill the checkpointed blocks BEHIND the cache's back — the
-    // local-mode stand-in for losing the executor that held them.
-    // localCheckpoint truncates lineage, so the blocks cannot be
-    // recomputed: an unvalidated cache entry would fail every later
-    // query over this rule set until LRU eviction.
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    assert(ancestors(chain).count() === 6)
+    loseBlocks()
+    val local = jobsIn { assert(ancestors(chain).count() === 6) }
+    assert(!local.exists(_.startsWith("graft:rule")), local)
+
+    // 1400 3-hop chains: the 4200-row seed is past FoldRows, so the
+    // cached relation reads a checkpoint. localCheckpoint truncates
+    // lineage, so its blocks cannot be recomputed: an unvalidated cache
+    // entry would fail every later query over this rule set until LRU
+    // eviction.
+    val chains = mkDb((0L until 1400L).flatMap { c =>
+      val e = 1000L + 4 * c
+      Seq(r(e, "parent", e + 1), r(e + 1, "parent", e + 2), r(e + 2, "parent", e + 3))
+    }, Map("parent" -> "vref"))
+    val cold = jobsDuring { assert(ancestors(chains).count() === 8400) }
+    loseBlocks()
     // the reuse path must detect staleness and rebuild (fixpoint jobs
     // run AGAIN — at least the cold run's jobs), then answer
-    val jobs = jobsDuring { assert(run().count() === 6) }
+    val jobs = jobsDuring { assert(ancestors(chains).count() === 8400) }
     assert(jobs >= cold, s"expected a rebuild after block loss ($cold jobs cold), got $jobs jobs")
     // and the re-put entry serves the NEXT reuse without rebuilding
-    val reuse = jobsDuring { assert(run().count() === 6) }
+    val reuse = jobsDuring { assert(ancestors(chains).count() === 8400) }
     assert(reuse <= 3, s"expected no fixpoint jobs on reuse, got $reuse")
+  }
+
+  test("rule applications with wildcards, constants and repeated variables keep set semantics") {
+    // 1 -> 2 -> 3 -> 1 is a cycle, and 4 -> 3 and 5 -> 2 enter it
+    val graph = mkDb(Seq(r(1, "parent", 2), r(2, "parent", 3), r(3, "parent", 1),
+      r(4, "parent", 3), r(5, "parent", 2)), Map("parent" -> "vref"))
+    def rows(where: Clause, find: String*): Set[Seq[Any]] =
+      Compiler.run(graph, Query(find = find.map(v => FVar(V(v), v)), where = where,
+        rules = ancRules)).collect().map(_.toSeq).toSet
+    // anc is {1, 2, 3, 4, 5} x {1, 2, 3}
+    assert(rows(RuleApp("anc", V("x"), W), "x") === (1L to 5L).map(Seq(_)).toSet)
+    assert(rows(RuleApp("anc", C(5L), V("y")), "y") === Set(1L, 2L, 3L).map(Seq(_)))
+    assert(rows(RuleApp("anc", V("x"), V("x")), "x") === Set(1L, 2L, 3L).map(Seq(_)))
+    // an aggregate sees the frames themselves, so it counts any
+    // duplicate binding a rule application lets through
+    def count(where: Clause, v: String): Long =
+      Compiler.run(graph, Query(find = Seq(FAgg("count", V(v), "n")), where = where,
+        rules = ancRules)).head().getLong(0)
+    assert(count(RuleApp("anc", V("x"), W), "x") === 5)
+    assert(count(RuleApp("anc", C(5L), V("y")), "y") === 3)
+    assert(count(RuleApp("anc", V("x"), V("x")), "x") === 3)
   }
 
   test("fixpoint cache distinguishes redefined TRANSITIVE rule dependencies") {

@@ -7,11 +7,12 @@ import graft.transact.Transactor
 import graft.transact.Transactor.{Add, MapForm, Retract, TxStmt}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Bridge
 
 /** A transacted session's snapshot, its delta resolved on the driver
   * (`DriverDelta`, `Versions.live`), must equal `FactDb.snapshot`'s
   * windowed resolution of the same log at every tx, on both sides of
-  * `Transactor.FoldRows`, over scripted and seeded random histories. */
+  * `Bridge.FoldRows`, over scripted and seeded random histories. */
 class DriverDeltaSpec extends SparkSpec {
   import graft.core.Schema.{CardinalityAttr => Card, CardinalityMany => Many, SchemaAttr => Name}
 
@@ -107,7 +108,7 @@ class DriverDeltaSpec extends SparkSpec {
   }
 
   private def filler(g: Graft): Long =
-    g.transact((0 to Transactor.FoldRows).map(i => Add(s"f$i", "filler", i.toLong))).txId
+    g.transact((0 to Bridge.FoldRows).map(i => Add(s"f$i", "filler", i.toLong))).txId
 
   test("Graft.open: the driver-resolved snapshot equals the windowed one at every tx") {
     Seq(3L, 17L).foreach { seed =>

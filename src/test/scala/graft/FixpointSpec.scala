@@ -17,20 +17,69 @@ class FixpointSpec extends SparkSpec {
 
   test("localCheckpointCount keeps the source's partitioning and counts in the same job") {
     // planned without AQE: an adaptive plan reports UnknownPartitioning
-    // whatever its exchanges do, so only a static plan shows the layout
+    // whatever its exchanges do, so only a static plan shows the layout.
+    // Above the cutoff, so the result is the checkpoint, not a local relation
     val conf = spark.conf
     conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val src = spark.range(1000).select((col("id") % 7).as("k"), col("id"))
+      val rows = 2L * Bridge.FoldRows
+      val src = spark.range(rows).select((col("id") % 7).as("k"), col("id"))
         .repartition(col("k"))
       val (ck, n) = Bridge.localCheckpointCount(src)
-      assert(n === 1000)
+      assert(n === rows)
+      assert(Bridge.localRows(ck).isEmpty)
       val layout = src.queryExecution.executedPlan.outputPartitioning
       assert(layout.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
       assert(ck.queryExecution.executedPlan.outputPartitioning === layout)
       assert(ck.collect().toSet === src.collect().toSet)
       Bridge.freeCheckpoint(ck)
     } finally conf.unset("spark.sql.adaptive.enabled")
+  }
+
+  test("a round of at most FoldRows rows is a local relation from one labelled job") {
+    val sc = spark.sparkContext
+    val persistent = sc.getPersistentRDDs.keySet
+    val src = spark.range(1000).select((col("id") % 7).as("k"), col("id"))
+    var round: Fixpoint.Round = null
+    val jobs = jobDescriptions { round = Fixpoint.materialize("probe", src) }
+    assert(jobs === Seq("graft:probe round 0"))
+    assert(round.rows === 1000)
+    assert(Bridge.localRows(round.df).map(_.size) === Some(1000))
+    // same columns as the source, and no checkpoint left behind
+    assert(round.df.columns.toSeq === src.columns.toSeq)
+    assert(round.df.collect().toSet === src.collect().toSet)
+    assert(Bridge.checkpointRddIds(round.df).isEmpty)
+    assert(sc.getPersistentRDDs.keySet === persistent)
+  }
+
+  test("a semi-naive loop whose deltas cross the cutoff returns every row") {
+    // seed {1}; each x derives 2x and 2x + 1 below n: deltas double from
+    // 1 row, and the last one (2^13 rows) is past FoldRows
+    val n = 4L * Bridge.FoldRows
+    val seed = Fixpoint.materialize("cross", Seq(1L).toDF("x"))
+    val parts = Fixpoint.semiNaive("cross", seed, maxRounds = 20) { (delta, total) =>
+      delta.select(explode(array(col("x") * 2, col("x") * 2 + 1)).as("x"))
+        .filter(col("x") < n).join(total, Seq("x"), "left_anti")
+    }
+    assert(parts.exists(p => Bridge.localRows(p).isDefined))
+    assert(parts.exists(p => Bridge.checkpointRddIds(p).nonEmpty))
+    val rows = Fixpoint.total(parts).as[Long].collect()
+    assert(rows.length === n - 1)
+    assert(rows.toSet === (1L until n).toSet)
+    parts.foreach(Bridge.freeCheckpoint)
+  }
+
+  test("a semi-naive total of local parts is one local relation within FoldRows") {
+    val a = Fixpoint.materialize("total", Seq(1L, 2L).toDF("x")).df
+    val b = Fixpoint.materialize("total", Seq(3L).toDF("x")).df
+    val t = Fixpoint.total(Seq(a, b))
+    assert(Bridge.localRows(t).map(_.size) === Some(3))
+    assert(t.as[Long].collect().toSet === Set(1L, 2L, 3L))
+    // past the cutoff the parts stay a union
+    val big = Fixpoint.materialize("total", spark.range(Bridge.FoldRows).toDF("x")).df
+    assert(Bridge.localRows(big).isDefined)
+    assert(Bridge.localRows(Fixpoint.total(Seq(big, b))).isEmpty)
+    assert(Fixpoint.total(Seq(big, b)).count() === Bridge.FoldRows + 1)
   }
 
   /** Job descriptions of the jobs `body` launches, in start order. */

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the fused HashedDim expression (r15) to the SQL arithmetic it
   * replaces — `pmod(conv(substring(md5(tok), 1, 8), 16, 10)::long, d)`
@@ -10,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle derive. Any drift here silently re-buckets every hash
   * embedding, so the equality is asserted value-for-value over random
   * tokens (unicode included) at several dims. */
-class HashDimSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("hashdim-spec").getOrCreate()
+class HashDimSpec extends SparkSpec {
 
   test("HashedDim == pmod(conv(substring(md5,1,8),16,10), d) for random tokens") {
     import spark.implicits._

@@ -11,6 +11,7 @@ import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Bridge
 
 /** The transact path's cost and commit contract: a commit is atomic
   * under concurrent callers, and a session's reads cost the same Spark
@@ -127,7 +128,7 @@ class TransactSpec extends SparkSpec {
     assert(before(2).size === 4)
     assert(leaves.isEmpty) // still a local relation
     // one transaction past the threshold folds the delta into one RDD
-    g.transact((0 to Transactor.FoldRows).map(i => Add(s"f$i", "filler", i.toLong)))
+    g.transact((0 to Bridge.FoldRows).map(i => Add(s"f$i", "filler", i.toLong)))
     assert(leaves.size === 1)
     assert(g.session.db.log.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
     assert(reads() === before)

@@ -3,7 +3,8 @@ package graft
 import graft.functions.VectorExpressions
 import org.apache.spark.sql.functions._
 
-class VectorExpressionsSpec extends SparkSpec {
+class VectorExpressionsSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val df = Seq(
@@ -173,6 +174,13 @@ class VectorExpressionsSpec extends SparkSpec {
       val d = s2.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
         .head().getDouble(0)
       assert(d === 11.0)
+      // the extension also injects the job-free local broadcast
+      val joined = s2.sql("SELECT * FROM VALUES (1, 'a'), (2, 'b') AS l(k, v) " +
+        "JOIN VALUES (1, 'x') AS r(k2, w) ON k = k2")
+      assert(joined.collect().map(_.getString(3)).toSeq === Seq("x"))
+      assert(collect(joined.queryExecution.executedPlan) {
+        case p: org.apache.spark.sql.graft.LocalBroadcastExec => p
+      }.size === 1, joined.queryExecution.executedPlan)
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
